@@ -272,7 +272,7 @@ FIRST_ROTATED_ROUND = 6
 # artifact lands would silently shift slots 34-50 to the next cohort).
 # Bump by 1 at the start of each round, when the previous round's
 # artifact gets committed.
-FIRST_UNRECORDED_ROUND = 14
+FIRST_UNRECORDED_ROUND = 15
 
 # The retry lane exists from round 8 (VERDICT r7 #2); earlier rounds
 # consumed a fixed 17-wide cohort slice, and the replay below must
@@ -311,6 +311,10 @@ FROZEN_UPGRADE_LANES: dict[int, tuple[str, ...]] = {
     # committed r01–r12 artifacts) — computed before bumping
     # FIRST_UNRECORDED_ROUND to 14.
     13: (),
+    # r14's dynamic upgrade set was empty (same check over the
+    # committed r01–r13 artifacts) — computed before bumping
+    # FIRST_UNRECORDED_ROUND to 15.
+    14: (),
 }
 
 
