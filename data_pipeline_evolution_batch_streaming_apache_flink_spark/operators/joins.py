@@ -8,7 +8,9 @@ AS-OF temporal joins (J5) and interval joins (J6). J1 is plain
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import uuid
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -60,6 +62,20 @@ def lookup_join(
     return out
 
 
+def _ident(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# names asof_join gives its working columns (plus __k0.. for the keys)
+_ASOF_COLUMNS = ("__ts", "__is_fact", "__dim", "__bver", "__bts", "__fver", "__fts", "__chosen", "__version")
+
+
 def asof_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -94,6 +110,14 @@ def asof_join(
     by the dim image itself, so last-in-frame = max struct — the same
     deterministic winner, folded into the one sort.
 
+    The plan is built in a constant number of JVM calls, however many
+    columns either side has: two ``selectExpr`` projections, one
+    ``unionByName`` and one SQL statement over a temporary view of the
+    union. A chain of joins thus costs the driver a few milliseconds per
+    join, not a py4j round trip per column. Fact columns pass through
+    under their own names, so they must not use the working names
+    ``__k0``.. and ``_ASOF_COLUMNS`` (``ValueError``).
+
     ``tolerance``: optional max staleness (e.g. "1 hour") — dim versions
     older than ``fact_ts - tolerance`` do not match (merge_asof-style).
     Output: all fact columns + dim's non-key/non-ts columns (NULL when no
@@ -119,29 +143,33 @@ def asof_join(
             f"direction must be backward/forward/nearest, got {direction!r}"
         )
     keys = [key] if isinstance(key, str) else list(key)
+    clash = sorted(set(fact.columns) & {*_ASOF_COLUMNS, *(f"__k{i}" for i in range(len(keys)))})
+    if clash:
+        raise ValueError(f"fact columns {clash} clash with asof_join's internal columns")
     dim_payload = [c for c in dim.columns if c not in keys and c not in (dim_ts, dim_op)]
+    join_keys = [(_ident(k), f"__k{i}") for i, k in enumerate(keys)]
 
     # Tag and align the two sides on a common layout:
-    #   (keys..., __ts, __is_fact, __dim struct, fact columns...)
+    #   (__k0.., __ts, __is_fact, __dim struct, fact columns...)
     # __dim leads with __live so a delete (live=false) is itself a carried
     # version; at equal (key, ts) the struct tie-break prefers live over
-    # tombstone, then max image — deterministic either way.
-    live = (~F.col(dim_op).isin("d", "D")) if dim_op else F.lit(True)
-    dim_side = dim.select(
-        *keys,
-        F.col(dim_ts).cast("timestamp").alias("__ts"),
-        F.lit(0).alias("__is_fact"),
-        F.struct(live.alias("__live"), *[F.col(c) for c in dim_payload]).alias("__dim"),
-        *[F.lit(None).cast(fact.schema[c].dataType).alias(f"__f_{c}") for c in fact.columns],
+    # tombstone, then max image — deterministic either way. Each side
+    # lacks the other's columns; unionByName fills them with typed NULLs.
+    live = f"NOT ({_ident(dim_op)} IN ('d', 'D'))" if dim_op else "true"
+    image = "".join(f", {_str(c)}, {_ident(c)}" for c in dim_payload)
+    dim_side = dim.selectExpr(
+        *[f"{k} AS {i}" for k, i in join_keys],
+        f"CAST({_ident(dim_ts)} AS TIMESTAMP) AS __ts",
+        "0 AS __is_fact",
+        f"named_struct('__live', {live}{image}) AS __dim",
     )
-    fact_side = fact.select(
-        *keys,
-        F.col(fact_ts).cast("timestamp").alias("__ts"),
-        F.lit(1).alias("__is_fact"),
-        F.lit(None).cast(dim_side.schema["__dim"].dataType).alias("__dim"),
-        *[F.col(c).alias(f"__f_{c}") for c in fact.columns],
+    fact_side = fact.selectExpr(
+        "*",
+        *[f"{k} AS {i}" for k, i in join_keys],
+        f"CAST({_ident(fact_ts)} AS TIMESTAMP) AS __ts",
+        "1 AS __is_fact",
     )
-    unioned = dim_side.unionByName(fact_side)
+    unioned = dim_side.unionByName(fact_side, allowMissingColumns=True)
 
     # dim rows sort before fact rows at equal ts (__is_fact 0 < 1), giving
     # inclusive AS-OF semantics (version effective AT fact_ts matches);
@@ -150,64 +178,58 @@ def asof_join(
     # Forward direction = the same running-carry over the REVERSED sort
     # (desc ts); both sorts hash-partition on the same keys, so nearest
     # costs one Exchange + two in-partition sorts, never two shuffles.
-    def _carried(reverse: bool) -> tuple[Column, Column]:
-        ordering = [
-            F.col("__ts").desc_nulls_first() if reverse else F.col("__ts").asc_nulls_first(),
-            F.col("__is_fact").asc(),
-            F.col("__dim").asc_nulls_first(),
-        ]
+    partition = ", ".join(i for _, i in join_keys)
+    carried, version = [], {}
+    for side, reverse in (("b", False), ("f", True)):
+        if direction not in ("nearest", "forward" if reverse else "backward"):
+            continue
         w = (
-            Window.partitionBy(*keys)
-            .orderBy(*ordering)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            f"OVER (PARTITION BY {partition} ORDER BY __ts {'DESC' if reverse else 'ASC'}"
+            " NULLS FIRST, __is_fact ASC, __dim ASC NULLS FIRST"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )
-        ver = F.last("__dim", ignorenulls=True).over(w)
-        vts = F.last(
-            F.when(F.col("__is_fact") == 0, F.col("__ts")), ignorenulls=True
-        ).over(w)
+        carried += [
+            f"last(__dim, true) {w} AS __{side}ver",
+            f"last(CASE WHEN __is_fact = 0 THEN __ts END, true) {w} AS __{side}ts",
+        ]
+        ver, vts = f"__{side}ver", f"__{side}ts"
         if tolerance is not None:
             within = (
-                vts <= F.col("__ts") + F.expr(f"INTERVAL {tolerance}")
-                if reverse
-                else vts >= F.col("__ts") - F.expr(f"INTERVAL {tolerance}")
+                f"{vts} <= __ts + INTERVAL {tolerance}" if reverse
+                else f"{vts} >= __ts - INTERVAL {tolerance}"
             )
-            ver = F.when(within, ver)
-            vts = F.when(within, vts)
-        return ver, vts
+            ver, vts = f"CASE WHEN {within} THEN {ver} END", f"CASE WHEN {within} THEN {vts} END"
+        version[side] = (ver, vts)
 
     if direction == "nearest":
-        bver, bts = _carried(False)
-        fver, fts = _carried(True)
-        staged = unioned.select(
-            "*",
-            bver.alias("__bver"), bts.alias("__bts"),
-            fver.alias("__fver"), fts.alias("__fts"),
-        )
+        (bver, bts), (fver, fts) = version["b"], version["f"]
         # ties (equidistant versions) prefer the backward match
-        back_wins = F.col("__fver").isNull() | (
-            F.col("__bver").isNotNull()
-            & (
-                F.unix_micros(F.col("__ts")) - F.unix_micros(F.col("__bts"))
-                <= F.unix_micros(F.col("__fts")) - F.unix_micros(F.col("__ts"))
-            )
+        back_wins = (
+            f"({fver}) IS NULL OR (({bver}) IS NOT NULL AND"
+            f" unix_micros(__ts) - unix_micros({bts}) <= unix_micros({fts}) - unix_micros(__ts))"
         )
-        carried = staged.withColumn(
-            "__version", F.when(back_wins, F.col("__bver")).otherwise(F.col("__fver"))
-        )
+        chosen = f"CASE WHEN {back_wins} THEN {bver} ELSE {fver} END"
     else:
-        ver, _ = _carried(direction == "forward")
-        carried = unioned.withColumn("__version", ver)
+        chosen = version["f" if direction == "forward" else "b"][0]
 
-    matched = F.col("__is_fact") == 1
-    if how == "inner":
-        matched = matched & F.coalesce(F.col("__version.__live"), F.lit(False))
-    return carried.filter(matched).select(
-        *[F.col(f"__f_{c}").alias(c) for c in fact.columns],
-        *[
-            F.when(F.col("__version.__live"), F.col(f"__version.{c}")).alias(c)
-            for c in dim_payload
-        ],
+    # the rest is one SQL statement over the union: a tombstone (or
+    # NULL-op) version then matches like no version at all
+    output = ", ".join(
+        [_ident(c) for c in fact.columns]
+        + [f"__version.{_ident(c)} AS {_ident(c)}" for c in dim_payload]
     )
+    view = f"__asof_{uuid.uuid4().hex}"
+    unioned.createOrReplaceTempView(view)
+    try:
+        return unioned.sparkSession.sql(
+            f"SELECT {output} FROM ("
+            " SELECT *, CASE WHEN __chosen.__live THEN __chosen END AS __version FROM ("
+            f"  SELECT *, {chosen} AS __chosen FROM ("
+            f"   SELECT *, {', '.join(carried)} FROM {view})))"
+            " WHERE __is_fact = 1" + (" AND __version IS NOT NULL" if how == "inner" else "")
+        )
+    finally:
+        unioned.sparkSession.catalog.dropTempView(view)
 
 
 def interval_join(

@@ -45,15 +45,14 @@ ENVELOPE_SCHEMA = "table string, op string, data string"
 def route_envelopes(batch: DataFrame) -> dict[str, DataFrame]:
     """Split the unified (table, op, data) stream into typed per-table
     DataFrames. Rows with unparseable/absent keys become null-keyed dim
-    versions that can never join — harmless (heartbeat pattern)."""
-    out = {}
-    for name, spec in SPECS.items():
-        out[name] = (
-            batch.filter(F.col("table") == name)
-            .select(F.from_json("data", spec.schema.replace(", op string", "")).alias("r"), F.col("op"))
-            .select("r.*", "op")
-        )
-    return out
+    versions that can never join — harmless (heartbeat pattern). Each
+    table is built from SQL expression strings, a few JVM calls apiece."""
+    return {
+        name: batch.where(f"`table` = '{name}'")
+        .selectExpr(f"from_json(data, '{spec.schema.replace(', op string', '')}') AS r", "op")
+        .selectExpr("r.*", "op")
+        for name, spec in SPECS.items()
+    }
 
 
 def enrich_orders(fact: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
@@ -65,32 +64,18 @@ def enrich_orders(fact: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     (``dim_op='op'``): an order placed after a dim row's delete joins
     NULLs for that dim, exactly like Flink's temporal join over the CDC
     changelog (a deleted key stops matching later facts)."""
-    orders = fact.filter(F.col("op") != "d")
-    exploded = orders.select(
-        F.col("id").alias("order_id"),
-        "table_assignment_id",
-        "event_time",
-        F.explode("pizzas").alias("pizza_id"),
+    exploded = fact.where("op <> 'd'").selectExpr(
+        "id AS order_id", "table_assignment_id", "event_time", "explode(pizzas) AS pizza_id"
     )
-    ta = dims["table_assignment"].select(
-        F.col("id").alias("table_assignment_id"), "client_id", "table_id",
-        F.col("event_time").alias("ta_time"), "op",
+    ta = dims["table_assignment"].selectExpr(
+        "id AS table_assignment_id", "client_id", "table_id", "event_time AS ta_time", "op"
     )
     j = asof_join(exploded, ta, key="table_assignment_id", fact_ts="event_time", dim_ts="ta_time", dim_op="op")
-    cl = dims["clients"].select(
-        F.col("id").alias("client_id"), F.col("name").alias("client_name"),
-        F.col("event_time").alias("cl_time"), "op",
-    )
+    cl = dims["clients"].selectExpr("id AS client_id", "name AS client_name", "event_time AS cl_time", "op")
     j = asof_join(j, cl, key="client_id", fact_ts="event_time", dim_ts="cl_time", dim_op="op")
-    tb = dims["tables"].select(
-        F.col("id").alias("table_id"), F.col("name").alias("table_name"),
-        F.col("event_time").alias("tb_time"), "op",
-    )
+    tb = dims["tables"].selectExpr("id AS table_id", "name AS table_name", "event_time AS tb_time", "op")
     j = asof_join(j, tb, key="table_id", fact_ts="event_time", dim_ts="tb_time", dim_op="op")
-    pz = dims["pizzas"].select(
-        F.col("id").alias("pizza_id"), F.col("name").alias("pizza"), "price",
-        F.col("event_time").alias("pz_time"), "op",
-    )
+    pz = dims["pizzas"].selectExpr("id AS pizza_id", "name AS pizza", "price", "event_time AS pz_time", "op")
     j = asof_join(j, pz, key="pizza_id", fact_ts="event_time", dim_ts="pz_time", dim_op="op")
     return j.groupBy("order_id", "client_name", "table_name").agg(
         json_arrayagg(json_object(pizza=F.col("pizza"), price=F.col("price"))).alias("pizzas"),

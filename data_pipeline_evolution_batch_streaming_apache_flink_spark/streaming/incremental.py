@@ -15,7 +15,9 @@ foreachBatch** — the same pattern Delta/Iceberg pipelines use:
 - The emission frontier = ``min`` over all inputs of (cumulative max event
   time − delay): exactly Flink's multi-input watermark. A silent input
   stalls the frontier — the reference's idle-source behavior
-  (``README.md:526-544``); the same heartbeat mitigation applies.
+  (``README.md:526-544``); the same heartbeat mitigation applies. Each
+  input's max event time is observed (``DataFrame.observe``) on its log
+  write, so routing runs one Spark job per input and no extra action.
 - Facts whose event time crosses the frontier since the previous batch are
   enriched with **batch as-of joins against the dim logs** (each dim
   version valid at the fact's event time — all such versions have
@@ -35,7 +37,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -136,26 +138,23 @@ class IncrementalTemporalJoin:
             return
         routed = self.route(batch_df)
 
-        # the source micro-batch is consumed once per routed table below;
-        # cache it so each per-table filter reads the cache instead of
-        # re-scanning/decoding the unified CDC batch (review r7)
-        batch_df.persist()
-        try:
-            for name, rows in routed.items():
-                spec = specs[name]
-                rows = rows.persist()
-                try:
-                    agg = rows.agg(F.max(F.col(spec.ts).cast("timestamp")).alias("m")).collect()[0]
-                    if agg["m"] is not None:
-                        prev = meta["max_ts"].get(name)
-                        cur = agg["m"].isoformat(sep=" ")
-                        if prev is None or cur > prev:
-                            meta["max_ts"][name] = cur
-                    self._write_epoch(rows, self._log_path(name), epoch_id)
-                finally:
-                    rows.unpersist()
-        finally:
-            batch_df.unpersist()
+        # One job per routed table: its log write. The table's max event
+        # time rides that write as an observed metric (NULL for a table
+        # absent from this batch), so the frontier costs no extra action.
+        for name, rows in routed.items():
+            seen = Observation()
+            ts = specs[name].ts
+            self._write_epoch(
+                rows.observe(seen, F.expr(f"max(CAST(`{ts}` AS TIMESTAMP)) AS m")),
+                self._log_path(name),
+                epoch_id,
+            )
+            m = seen.get["m"]
+            if m is not None:
+                prev = meta["max_ts"].get(name)
+                cur = m.isoformat(sep=" ")
+                if prev is None or cur > prev:
+                    meta["max_ts"][name] = cur
         meta["last_epoch"] = int(epoch_id) if epoch_id is not None else None
 
         # multi-input watermark: min over every input's cumulative max −

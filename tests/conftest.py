@@ -57,7 +57,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dpe-tests", cpus=8)
+    # local[$SPARK_GRAFT_CPUS] as the verify command exports it, else
+    # every local core (get_spark's default)
+    s = get_spark("dpe-tests")
     yield s
 
 

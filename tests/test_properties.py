@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.dedup import (
@@ -73,6 +73,66 @@ def test_asof_join_matches_pandas_merge_asof(spark, dims, facts):
         expected = {
             int(r.fid): (None if pd.isna(r.v) else int(r.v)) for r in m.itertuples()
         }
+    assert got == expected
+
+
+# a narrower time domain than TS, so equal-(key, ts) versions are common
+CDC_TS = st.integers(min_value=0, max_value=6)
+cdc_dim_rows = st.lists(
+    st.tuples(KEYS, CDC_TS, st.integers(0, 3), st.sampled_from(["c", "u", "d"])),
+    min_size=0, max_size=14,
+)
+cdc_fact_rows = st.lists(st.tuples(KEYS, CDC_TS), min_size=1, max_size=12)
+
+
+# pinned cases: equal-(key, ts) versions with a tombstone among them, a
+# live/delete tie at one ts, and a later delete, under both join kinds
+CDC_DIMS = [(0, 1, 2, "c"), (0, 1, 3, "c"), (0, 1, 3, "d"), (1, 2, 1, "d"),
+            (1, 2, 1, "c"), (1, 4, 0, "d"), (3, 0, 1, "u")]
+CDC_FACTS = [(0, 1), (0, 3), (1, 2), (1, 3), (1, 5), (2, 0), (3, 0)]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(dims=cdc_dim_rows, facts=cdc_fact_rows, how=st.sampled_from(["left", "inner"]))
+@example(dims=CDC_DIMS, facts=CDC_FACTS, how="left")
+@example(dims=CDC_DIMS, facts=CDC_FACTS, how="inner")
+def test_asof_join_cdc_versions_match_pandas_merge_asof(spark, dims, facts, how):
+    """The changelog surface of asof_join against pandas: duplicate
+    (key, ts) versions resolve to the max-struct winner (a live version
+    beats a tombstone, then the larger image), a winning delete
+    tombstones the key until its next version (NULL image under
+    ``left``, row dropped under ``inner``). The tiny value domain makes
+    equal-(key, ts) duplicates frequent."""
+    dim_list = [(k, _ts(t), v, op) for k, t, v, op in dims]
+    fact_list = [(i, k, _ts(t)) for i, (k, t) in enumerate(facts)]
+    fact_df = spark.createDataFrame(fact_list, "fid int, k int, fts timestamp")
+    dim_df = spark.createDataFrame(dim_list, "k int, dts timestamp, v int, op string")
+    got = {
+        r["fid"]: r["v"]
+        for r in asof_join(
+            fact_df, dim_df, key="k", fact_ts="fts", dim_ts="dts", how=how, dim_op="op"
+        ).collect()
+    }
+
+    # winner per (key, ts): max of (live, v), as the struct ordering picks
+    dpd = pd.DataFrame(dim_list, columns=["k", "dts", "v", "op"])
+    dpd["live"] = dpd["op"] != "d"
+    dpd = (
+        dpd.sort_values(["k", "dts", "live", "v"])
+        .drop_duplicates(["k", "dts"], keep="last")
+        .sort_values("dts")
+    )
+    fpd = pd.DataFrame(fact_list, columns=["fid", "k", "fts"]).sort_values("fts")
+    if dpd.empty:
+        m = fpd.assign(v=None, live=None)
+    else:
+        m = pd.merge_asof(fpd, dpd, left_on="fts", right_on="dts", by="k", direction="backward")
+    expected = {}
+    for r in m.itertuples():
+        if pd.notna(r.live) and bool(r.live):
+            expected[int(r.fid)] = int(r.v)
+        elif how == "left":
+            expected[int(r.fid)] = None
     assert got == expected
 
 
