@@ -2056,12 +2056,16 @@ def margin_mine_ivf(
 
     # The two sides' sample passes (a count + a capped collect each) are
     # independent — submit them from two driver threads so the second
-    # side's jobs back-fill the first's stragglers (guide §2.6).
+    # side's jobs back-fill the first's stragglers (guide §2.6). Each
+    # target is wrapped so its jobs keep the caller's JVM local
+    # properties (job group, description, scheduler pool).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fl = pool.submit(_side_sample, left, left_vec)
-        fr = pool.submit(_side_sample, right, right_vec)
+        fl = pool.submit(inheritable_thread_target(left.sparkSession)(_side_sample), left, left_vec)
+        fr = pool.submit(inheritable_thread_target(left.sparkSession)(_side_sample), right, right_vec)
         XL, nL, uL = fl.result()
         XR, nR, uR = fr.result()
     if XL is None and XR is None:

@@ -18,16 +18,22 @@ foreachBatch** — the same pattern Delta/Iceberg pipelines use:
   (``README.md:526-544``); the same heartbeat mitigation applies. Each
   input's max event time is observed (``DataFrame.observe``) on its log
   write, so routing runs one Spark job per input and no extra action.
+  The log writes are independent, so they run concurrently, one driver
+  thread each.
 - Facts whose event time crosses the frontier since the previous batch are
   enriched with **batch as-of joins against the dim logs** (each dim
   version valid at the fact's event time — all such versions have
   necessarily arrived once the frontier passed) and appended to the output
-  upsert log. Per-batch work is O(new facts × dim lookup), not O(log).
+  upsert log.
 
-At scale the logs are ordinary partitioned tables (partition by event
-date; prune old fact partitions after emission; compact dim logs to the
-latest version at-or-below the frontier — same pruning rule as the
-in-state streaming operator in ``streaming/__init__.py``).
+Per-batch cost: the fact read is O(pending epochs). ``frontier.json``
+records the max event time of every fact-log epoch directory that still
+holds a row above the emitted frontier, and an emission reads only those
+directories; a directory leaves the record once the frontier passes its
+max. The dim logs are still read (and sorted by each as-of join) in
+full, so dim work stays O(log). Compacting each dim log to the latest
+version at-or-below the frontier — the pruning rule of the in-state
+streaming operator in ``streaming/__init__.py`` — would bound it.
 """
 
 from __future__ import annotations
@@ -35,10 +41,12 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 @dataclass(frozen=True)
@@ -90,13 +98,13 @@ class IncrementalTemporalJoin:
     def _log_path(self, name: str) -> str:
         return os.path.join(self.base, "logs", name)
 
-    def _write_epoch(self, df: DataFrame, path: str, epoch_id) -> None:
-        """Overwrite into an epoch-named subdir (idempotent replay); a
-        manual drive without an epoch id falls back to plain append."""
-        if epoch_id is None:
-            df.write.mode("append").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
+    @staticmethod
+    def _epoch_dir(epoch_id: int) -> str:
+        return f"e{int(epoch_id):010d}"
+
+    def _write_epoch(self, df: DataFrame, path: str, epoch_id: int) -> None:
+        """Overwrite into an epoch-named subdir (idempotent replay)."""
+        df.write.mode("overwrite").parquet(os.path.join(path, self._epoch_dir(epoch_id)))
 
     def _read_log(self, spec: SourceSpec) -> DataFrame:
         path = self._log_path(spec.name)
@@ -108,6 +116,15 @@ class IncrementalTemporalJoin:
             .parquet(path)
         )
 
+    def _read_epochs(self, spec: SourceSpec, epoch_dirs: list[str]) -> DataFrame:
+        """The named epoch directories of a log, by explicit paths."""
+        if not epoch_dirs:
+            return self.spark.createDataFrame([], spec.schema)
+        path = self._log_path(spec.name)
+        return self.spark.read.schema(spec.schema).parquet(
+            *(os.path.join(path, d) for d in epoch_dirs)
+        )
+
     def _meta_path(self) -> str:
         return os.path.join(self.base, "frontier.json")
 
@@ -116,7 +133,7 @@ class IncrementalTemporalJoin:
             with open(self._meta_path()) as fh:
                 return json.load(fh)
         except FileNotFoundError:
-            return {"max_ts": {}, "emitted_frontier": None, "last_epoch": None}
+            return {"max_ts": {}, "emitted_frontier": None, "last_epoch": None, "pending_facts": {}}
 
     def _save_meta(self, meta: dict) -> None:
         tmp = self._meta_path() + ".tmp"
@@ -133,15 +150,15 @@ class IncrementalTemporalJoin:
         # its per-epoch overwrites land on the same paths — idempotent
         # either way. Epoch ids are monotonic per checkpoint (Structured
         # Streaming continues numbering across restarts).
-        last = meta.get("last_epoch")
-        if epoch_id is not None and last is not None and int(epoch_id) <= int(last):
+        last = meta["last_epoch"]
+        if last is not None and int(epoch_id) <= int(last):
             return
         routed = self.route(batch_df)
 
         # One job per routed table: its log write. The table's max event
         # time rides that write as an observed metric (NULL for a table
         # absent from this batch), so the frontier costs no extra action.
-        for name, rows in routed.items():
+        def write(name: str, rows: DataFrame):
             seen = Observation()
             ts = specs[name].ts
             self._write_epoch(
@@ -149,13 +166,35 @@ class IncrementalTemporalJoin:
                 self._log_path(name),
                 epoch_id,
             )
-            m = seen.get["m"]
-            if m is not None:
-                prev = meta["max_ts"].get(name)
-                cur = m.isoformat(sep=" ")
-                if prev is None or cur > prev:
-                    meta["max_ts"][name] = cur
-        meta["last_epoch"] = int(epoch_id) if epoch_id is not None else None
+            return seen.get["m"]
+
+        # The writes are independent: run them concurrently, one thread
+        # per table, so their planning and commit overlap. A plain thread
+        # would lose the caller's JVM local properties — the streaming
+        # query's job group (which stop() cancels) and any job group a
+        # caller counts jobs by — so every target is wrapped on its own
+        # (a shared wrapper would share one mutable property set). Leaving
+        # the pool waits for every write, and a failed write re-raises
+        # here, before anything reaches frontier.json.
+        with ThreadPoolExecutor(max_workers=len(routed)) as pool:
+            futures = {
+                name: pool.submit(inheritable_thread_target(self.spark)(write), name, rows)
+                for name, rows in routed.items()
+            }
+            observed = {name: f.result() for name, f in futures.items()}
+        prev_frontier = meta["emitted_frontier"]
+        for name, m in observed.items():
+            if m is None:
+                continue
+            cur = m.isoformat(sep=" ")
+            prev = meta["max_ts"].get(name)
+            if prev is None or cur > prev:
+                meta["max_ts"][name] = cur
+            # a fact epoch whose rows are all at or below the emitted
+            # frontier can never emit, so it is not recorded
+            if name == self.fact.name and (prev_frontier is None or cur > prev_frontier):
+                meta["pending_facts"][self._epoch_dir(epoch_id)] = cur
+        meta["last_epoch"] = int(epoch_id)
 
         # multi-input watermark: min over every input's cumulative max −
         # delay. Inputs that never produced a row hold the frontier at -inf
@@ -176,12 +215,13 @@ class IncrementalTemporalJoin:
             milliseconds=_parse_gap_ms(self.delay)
         )
         frontier_s = frontier_dt.isoformat(sep=" ")
-        prev_frontier = meta["emitted_frontier"]
         if prev_frontier is not None and frontier_s <= prev_frontier:
             self._save_meta(meta)
             return
 
-        facts = self._read_log(self.fact)
+        # every recorded epoch holds a row above prev_frontier; the filter
+        # below still drops its rows at or below it (late arrivals)
+        facts = self._read_epochs(self.fact, sorted(meta["pending_facts"]))
         ts = F.col(self.fact.ts).cast("timestamp")
         emittable = facts.filter(ts <= F.lit(frontier_s).cast("timestamp"))
         if prev_frontier is not None:
@@ -192,6 +232,9 @@ class IncrementalTemporalJoin:
         self._write_epoch(out, os.path.join(self.base, "out"), epoch_id)
 
         meta["emitted_frontier"] = frontier_s
+        meta["pending_facts"] = {
+            d: m for d, m in meta["pending_facts"].items() if m > frontier_s
+        }
         self._save_meta(meta)
 
     # -- results ------------------------------------------------------------

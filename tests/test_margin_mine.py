@@ -351,3 +351,25 @@ def test_ivf_knn_join_query_parts_guard(spark):
     df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="query_parts"):
         ivf_knn_join(df, df, "vec_id", "vec_id", query_parts=0)
+
+
+def test_margin_mine_ivf_side_samples_keep_the_callers_job_group(spark):
+    """margin_mine_ivf runs its two side-sample passes from helper
+    threads; their jobs must stay in the caller's job group, so none of
+    them shows up as a job without a group."""
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.similarity import margin_mine_ivf
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    l, r = _bigger_corpora(spark)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("margin-ivf", "margin-ivf")
+    try:
+        margin_mine_ivf(l, r, "vec_id", "vec_id", knn_k=3, n_cells=4, n_probe=4).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("margin-ivf")

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.changelog import latest_per_key
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.plans.pizzeria_streaming import (
     ENVELOPE_SCHEMA,
@@ -254,6 +256,96 @@ def test_scenario6_routing_runs_one_job_per_table(spark, tmp_path):
 
     assert _jobs_in_group(spark, "s6-route-replay", drive(orders_only, 1)) == 0
     assert engine._load_meta() == after
+
+
+def _df(spark, rows):
+    return spark.createDataFrame([(r["table"], r["op"], r["data"]) for r in rows], ENVELOPE_SCHEMA)
+
+
+def test_scenario6_emission_reads_only_pending_order_epochs(spark, tmp_path):
+    """An emission reads only the order-log epoch directories that still
+    hold an order above the emitted frontier. ``frontier.json`` records
+    each such epoch's max event time; an epoch leaves the record once the
+    frontier passes it, and an order arriving at or below the emitted
+    frontier is dropped."""
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.plans.pizzeria_streaming import enrich_orders
+
+    engine = scenario6_engine(spark, str(tmp_path / "s6_prune"))
+    reads = {}
+
+    def spy(facts, dims):
+        reads[epoch] = sorted({f.split("/")[-2] for f in facts.inputFiles()})
+        return enrich_orders(facts, dims)
+
+    engine.enrich = spy
+    dims, o1, upd, heartbeats = _batches()
+    late = [env("orders", "c", id=3, table_assignment_id=1,
+                order_time="2024-03-01 11:00:00", pizzas=[2],
+                event_time="2024-03-01 11:00:00")]
+    hb2 = "2024-03-01 13:00:00"
+    later = [env("orders", "c", id=4, table_assignment_id=1,
+                 order_time="2024-03-01 12:30:00", pizzas=[1],
+                 event_time="2024-03-01 12:30:00")] + [
+        env(t, "c", id=999, event_time=hb2)
+        for t in ("clients", "tables", "table_assignment", "pizzas", "orders")
+    ]
+    pending = lambda: engine._load_meta()["pending_facts"]  # noqa: E731
+
+    for epoch, rows in enumerate([dims, o1, upd]):
+        engine.foreach_batch(_df(spark, rows), epoch)
+    # order 1 is ahead of the dims' frontier (10:00): recorded, not emitted
+    assert pending() == {"e0000000001": "2024-03-01 10:01:00", "e0000000002": "2024-03-01 10:06:00"}
+
+    epoch = 3  # heartbeats: the frontier passes every order so far
+    engine.foreach_batch(_df(spark, heartbeats), epoch)
+    assert reads[3] == ["e0000000001", "e0000000002", "e0000000003"]
+    assert _parsed(engine.output().collect()) == EXPECTED
+    assert pending() == {}
+
+    epoch = 4  # order 3 at 11:00 is at or below the emitted 12:00 frontier
+    engine.foreach_batch(_df(spark, late), epoch)
+    assert pending() == {}
+    epoch = 5
+    engine.foreach_batch(_df(spark, later), epoch)
+    assert reads == {1: ["e0000000001"], 3: reads[3], 5: ["e0000000005"]}
+    assert _parsed(engine.output().collect()) == {**EXPECTED, 4: [("margherita", 6)]}
+    assert pending() == {}
+
+
+def test_scenario6_failed_log_write_leaves_the_epoch_unapplied(spark, tmp_path):
+    """The per-table log writes run concurrently; when one of them fails,
+    ``foreach_batch`` raises before ``frontier.json`` is written, so a
+    replay of the same epoch id re-applies it and the output holds every
+    order exactly once."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.plans.pizzeria_streaming import route_envelopes
+
+    def poisoned(batch):
+        t = route_envelopes(batch)
+        price = t["pizzas"].schema["price"].dataType
+        t["pizzas"] = t["pizzas"].withColumn("price", F.expr("raise_error('poisoned pizzas')").cast(price))
+        return t
+
+    engine = scenario6_engine(spark, str(tmp_path / "s6_fail"))
+    dims, o1, upd, heartbeats = _batches()
+    engine.foreach_batch(_df(spark, dims), 0)
+    engine.foreach_batch(_df(spark, o1), 1)
+    meta_path = tmp_path / "s6_fail" / "frontier.json"
+    before = meta_path.read_text()
+
+    engine.route = poisoned
+    with pytest.raises(Exception, match="poisoned pizzas"):
+        engine.foreach_batch(_df(spark, upd), 2)
+    assert meta_path.read_text() == before
+    assert engine._load_meta()["last_epoch"] == 1
+
+    engine.route = route_envelopes
+    engine.foreach_batch(_df(spark, upd), 2)  # the replay of epoch 2
+    engine.foreach_batch(_df(spark, heartbeats), 3)
+    rows = [r for r in engine.output().collect() if r["order_id"] != 999]
+    assert _parsed(rows) == EXPECTED
+    assert sorted(r["order_id"] for r in rows) == [1, 2]
 
 
 def test_w3_multiple_watermark_policy_min_vs_max_conformance(spark, tmp_path):
