@@ -89,7 +89,7 @@ def cosine_topk(
 
     spark = corpus.sparkSession
     qdf = _collect_query_vectors(queries, query_id, query_vec, max_query_rows)
-    Q = np.stack(qdf["__qv"].to_numpy()).astype(np.float64)
+    Q = _stack(qdf["__qv"])
     q_ids = qdf["qid"].to_numpy()
     nq = _fold_norms(Q)
     bc = spark.sparkContext.broadcast((q_ids, Q, nq))
@@ -103,7 +103,7 @@ def cosine_topk(
         for p in batches:
             if not len(p):
                 continue
-            C = np.stack(p["__cv"].to_numpy()).astype(np.float64)
+            C = _stack(p["__cv"])
             ids_c = p["__cid"].to_numpy()
             cos = _fold_matmul(Qm, C) / (nQ[:, None] * _fold_norms(C)[None, :])
             if not include_self:
@@ -122,10 +122,32 @@ def cosine_topk(
     )
 
 
+def _check_positive(**knobs) -> None:
+    """Reject any knob below 1; ``None`` (auto) passes."""
+    for name, value in knobs.items():
+        if value is not None and value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
+
+
+def _stack(vectors):
+    """(n, d) float64 matrix of a pandas column of vectors."""
+    import numpy as np
+
+    return np.stack(vectors.to_numpy()).astype(np.float64)
+
+
+def _unit_rows(X):
+    """``X`` with every row scaled to unit L2 norm (all-zero rows stay
+    zero)."""
+    import numpy as np
+
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
 def _local_topk_frames(ids_q, ids_c, cos, k: int) -> list:
     """Per-query LOCAL top-k candidate rows from a scored block —
     shared by :func:`cosine_topk` (per corpus partition) and
-    :func:`ivf_knn_join` (per quantizer cell). The 2e-6 slack below
+    :func:`_block_topk` (its IVF caller, per quantizer cell). The 2e-6 slack below
     the raw kth score keeps rounded ties alive for the exact global
     6dp ranking; -inf self-masks drop via isfinite. This block is
     load-bearing for the suite's hash checks — one copy only."""
@@ -156,8 +178,7 @@ def _cell_assign_mapper(cent_bc):
         for p in batches:
             if not len(p):
                 continue
-            V = np.stack(p["__cv"].to_numpy()).astype(np.float64)
-            V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+            V = _unit_rows(_stack(p["__cv"]))
             yield p.assign(__cell=_assign_cells(V, cent_bc.value).astype(np.int32))
 
     return _assign
@@ -173,7 +194,7 @@ def _assign_cells(X, cent, chunk: int = 65536):
     by construction."""
     import numpy as np
 
-    cu = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
+    cu = _unit_rows(cent)
     out = np.empty(len(X), dtype=np.int64)
     for i in range(0, len(X), chunk):
         out[i : i + chunk] = (X[i : i + chunk] @ cu.T).argmax(1)
@@ -195,16 +216,16 @@ def _hash_sampled_matrix(
     so the same data yields a bit-identical matrix regardless of storage
     order, partitioning, or retries. The cap costs one extra count of the
     sampled column. Shared by :func:`pq_fit_codebooks`,
-    :func:`_fit_cells`, and :func:`ivf_knn_join`'s cell-population
-    estimator. ``return_count=True`` returns ``(matrix, n_rows)`` where
+    :func:`_fit_cells`, and the IVF cell join's split sizing
+    (:func:`_side_sample`). ``return_count=True`` returns ``(matrix, n_rows)`` where
     ``n_rows`` is the pre-cap row count of the (frac-filtered) input —
     with ``sample_frac=None`` that is the full corpus count, reusing the
     count the cap logic already pays. ``return_hashes=True`` appends the
     rows' hash scores (ascending, aligned with the matrix) so a caller
     can MERGE two sides' samples into the union's sample without a
     third pass: the lowest-``max_train_rows`` hashes of A ∪ B are a
-    subset of each side's lowest-``max_train_rows`` (r13,
-    ``margin_mine_ivf``)."""
+    subset of each side's lowest-``max_train_rows``
+    (``margin_mine_ivf``)."""
     import numpy as np
 
     # Uniform content hash in [0, 1): shift the signed 64-bit hash into
@@ -233,7 +254,7 @@ def _hash_sampled_matrix(
         pdf = pdf.head(max_train_rows)
     if not len(pdf):
         raise ValueError("cannot fit a quantizer on an empty (or fully sampled-out) corpus")
-    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    mat = _stack(pdf["v"])
     out = (mat,)
     if return_count:
         out += (n_rows,)
@@ -261,10 +282,9 @@ def _fit_cells(
     ``return_sample=True``, the unit-normalized training sample matrix
     and the pre-cap sampled-row count, so an in-call
     :func:`ivf_knn_join` fit can feed the cell-population estimator
-    WITHOUT a second sampling pass over the same corpus (ADVICE r12:
-    the sizing re-ran the exact count + capped ``toPandas`` collect
-    this fit had just paid). With ``sample_frac=None`` (every caller
-    here) the returned count is the full corpus row count.
+    WITHOUT a second sampling pass over the same corpus. With
+    ``sample_frac=None`` (every caller here) the returned count is the
+    full corpus row count.
 
     The fit runs on a bounded content-hash SAMPLE (the standard coarse-
     quantizer recipe: the cells need ~100k representative rows, not the
@@ -272,16 +292,14 @@ def _fit_cells(
     fixed iterations, restart selection by total cosine — deterministic
     AND layout-independent, since the sample is content-hash ordered);
     assignment is ONE Arrow-batched cosine-argmax pass over the corpus
-    against the broadcast centroids — no shuffle. Replaced the
-    pyspark.ml ``KMeans.fit`` (r9): Lloyd's over the FULL corpus is
-    ~20 passes over 100 TB where the sampled fit is one sample pass + one
-    assignment pass, the fit cost is CAPPED (100k rows) instead of
-    corpus-proportional, and content-hash sampling makes the centroids
-    layout-independent, which a distributed fit never was. Locally the
-    ML fit's job fan-out dominated cold-session builds (~15 s incl. JVM/
-    BLAS warmup; ~2-3 s warm — tools/index_build_ab.py has the honest
-    A/B). At suite scale the cap exceeds the corpus, so the "sample"
-    is the whole corpus and the fit is exact.
+    against the broadcast centroids — no shuffle. Versus a distributed
+    Lloyd's fit (pyspark.ml ``KMeans``): that is ~20 passes over 100 TB
+    where the sampled fit is one sample pass + one assignment pass, the
+    fit cost is CAPPED (100k rows) instead of corpus-proportional, and
+    content-hash sampling makes the centroids layout-independent, which
+    a distributed fit is not (``tools/index_build_ab.py`` has the A/B).
+    At suite scale the cap exceeds the corpus, so the "sample" is the
+    whole corpus and the fit is exact.
 
     Returned centroids are the cell MEANS (the quantization centers the
     IVF-PQ residuals subtract); they are normalized only where cosine
@@ -289,7 +307,7 @@ def _fit_cells(
     :func:`_probe_cells` — cosine is scale-invariant, so the stored scale
     is irrelevant there).
 
-    Determinism scope (ADVICE r9): layout/retry/restart-independence
+    Determinism scope: layout/retry/restart-independence
     holds on a GIVEN host — :func:`_assign_cells` scores with BLAS
     matmul (``X @ cu.T``), whose last-ulp summation order varies across
     BLAS builds/thread counts, so indexes built on heterogeneous driver
@@ -304,10 +322,8 @@ def _fit_cells(
         # Caller-provided (raw matrix, pre-cap count) — e.g.
         # margin_mine_ivf merges its two sides' hash samples into the
         # union's sample (bit-identical by the subset property on
-        # _hash_sampled_matrix) instead of paying a third scan. Copy:
-        # the normalization below is in-place and the caller reuses the
-        # raw matrices for the sizing estimators.
-        X, n_rows = _sample[0].copy(), _sample[1]
+        # _hash_sampled_matrix) instead of paying a third scan.
+        X, n_rows = _sample
     elif return_sample:
         # The capped sample already pays this count — returning it is free.
         X, n_rows = _hash_sampled_matrix(
@@ -320,7 +336,7 @@ def _fit_cells(
     # with cosine neighborhoods (measured: probe recall 0.78 vs 0.83 at
     # n_cells=8/n_probe=4 on sf0.01). For already-normalized inputs
     # (the IVF-PQ build) this is an idempotent no-op.
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows(X)
     # Spherical k-means (assign by cosine, update by mean), k-means++
     # seeding, several seeded restarts, keep the highest-total-cosine fit
     # (FAISS's nredo). Measured against the Euclidean/raw-space
@@ -351,7 +367,7 @@ def _fit_cells(
                 mask = assign == c
                 if mask.any():
                     trial[c] = X[mask].mean(0)
-        cu = trial / np.maximum(np.linalg.norm(trial, axis=1, keepdims=True), 1e-12)
+        cu = _unit_rows(trial)
         score = (X * cu[_assign_cells(X, trial)]).sum()  # total cosine
         if best_score is None or score > best_score:
             best_score, cent = score, trial
@@ -532,7 +548,7 @@ def pq_fit_codebooks(
         corpus.select(F.col(vec_col).alias("v")), sample_frac, max_train_rows
     )
     if normalize:
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        X = _unit_rows(X)
     n, d = X.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -584,9 +600,9 @@ def pq_encode(
         for p in batches:
             if not len(p):
                 continue
-            X = np.stack(p["__v"].to_numpy()).astype(np.float64)
+            X = _stack(p["__v"])
             if normalize:
-                X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+                X = _unit_rows(X)
             codes = np.empty((len(X), m), dtype=np.uint8)
             for s in range(m):
                 sub = X[:, s * dsub : (s + 1) * dsub]
@@ -644,8 +660,7 @@ def pq_cosine_topk(
     encoded = pq_encode(corpus, books, corpus_id, vec_col=vec_col)
 
     qdf = _collect_query_vectors(queries, query_id, vec_col, max_query_rows)
-    Q = np.stack(qdf["__qv"].to_numpy()).astype(np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    Q = _unit_rows(_stack(qdf["__qv"]))
     dsub = Q.shape[1] // m
     # per-query ADC tables: lut[q, s, c] = <q_sub_s, centroid_c_of_s>
     lut = np.einsum("qsd,scd->qsc", Q.reshape(len(Q), m, dsub), books)
@@ -1016,7 +1031,7 @@ def lsh_hash_buckets(
         for p in batches:
             if not len(p):
                 continue
-            A = np.stack(p["__v"].to_numpy()).astype(np.float64)  # (n, d)
+            A = _stack(p["__v"])  # (n, d)
             acc = np.zeros((len(p), planes.shape[0]))
             for j in range(A.shape[1]):  # left-fold across dims
                 acc += A[:, j : j + 1] * planes[:, j][None, :]
@@ -1160,8 +1175,8 @@ def bucketed_cosine_pairs(
         for p in batches:
             if not len(p):
                 continue
-            A = np.stack(p["__va"].to_numpy()).astype(np.float64)
-            B = np.stack(p["__vb"].to_numpy()).astype(np.float64)
+            A = _stack(p["__va"])
+            B = _stack(p["__vb"])
             acc = np.zeros(len(p))
             for j in range(A.shape[1]):
                 acc += A[:, j] * B[:, j]
@@ -1257,7 +1272,7 @@ def _bucket_verified_pairs(
         def _bucket_verify(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) < 2:
                 return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-            A = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+            A = _stack(pdf["__v"])
             ids = pdf["__id"].to_numpy()
             norms = _fold_norms(A)
             denom = norms[:, None] * norms[None, :]
@@ -1323,8 +1338,8 @@ def _bucket_verified_pairs(
             pb = pdf[pdf["__side"] == "b"]
             if not len(pa) or not len(pb):
                 return empty
-            A = np.stack(pa["__v"].to_numpy()).astype(np.float64)
-            B = np.stack(pb["__v"].to_numpy()).astype(np.float64)
+            A = _stack(pa["__v"])
+            B = _stack(pb["__v"])
             ids_a = pa["__id"].to_numpy()
             ids_b = pb["__id"].to_numpy()
             denom = _fold_norms(A)[:, None] * _fold_norms(B)[None, :]
@@ -1468,8 +1483,7 @@ def margin_mine(
     pair endpoints whose cardinality is ≤ (|L| + |R|)·knn_k. The id
     spaces of the two corpora may overlap (nothing is self-masked —
     corpora are distinct by contract)."""
-    if knn_k < 1:
-        raise ValueError(f"knn_k must be >= 1, got {knn_k}")
+    _check_positive(knn_k=knn_k)
     fwd = cosine_topk(
         left, right, left_id, right_id, left_vec, right_vec,
         k=knn_k, include_self=True, max_query_rows=max_query_rows,
@@ -1556,27 +1570,36 @@ def _margin_select(
 def _centroid_matrix(cent_df: DataFrame):
     """Collect the (tiny, n_cells x dim) centroid table to a unit-row
     numpy matrix ordered by cell id."""
-    import numpy as np
-
     pdf = cent_df.toPandas().sort_values("cell", ignore_index=True)
     if list(pdf["cell"]) != list(range(len(pdf))):
         raise ValueError("centroid table must hold cells 0..n_cells-1")
-    cent = np.stack(pdf["centroid"].to_numpy()).astype(np.float64)
-    return cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
+    return _unit_rows(_stack(pdf["centroid"]))
+
+
+def _probe_order(V, cu, take: int):
+    """The (at most) ``take`` nearest cells of each unit row of ``V``
+    against the unit centroid matrix ``cu``, nearest first. A stable
+    argsort of the negated scores keeps equal scores in ascending-cell
+    order — the lowest-cell tiebreak of :func:`_probe_cells`. The one
+    probe rule of the executor probes and the driver-side fan-in
+    estimate, so the estimate counts exactly the cells the probe picks."""
+    import numpy as np
+
+    return np.argsort(-(V @ cu.T), axis=1, kind="stable")[:, :take]
 
 
 def _probe_cells_distributed(
     df: DataFrame, id_col: str, vec_col: str, cent_bc, n_probe: int
 ) -> DataFrame:
     """``n_probe`` nearest cells per row, computed EXECUTOR-SIDE (one
-    Arrow-batched argsort pass against the already-broadcast centroid
-    matrix ``cent_bc``) and exploded to ``(qid, __qv, __cell)`` rows —
-    no driver collect, so the "query" side may be a full corpus. The
-    TIEBREAK RULE matches :func:`_probe_cells` (equal scores go to the
-    lowest cell id), but the scores themselves come from a BLAS matmul
-    while ``_probe_cells`` folds the cosine in SQL — last-ulp score
-    differences can yield tie-adjacent probe sets that differ between
-    the two paths (same caveat as documented on ``_fit_cells``)."""
+    Arrow-batched :func:`_probe_order` pass against the already-broadcast
+    centroid matrix ``cent_bc``) and exploded to ``(qid, __qv, __cell)``
+    rows — no driver collect, so the "query" side may be a full corpus.
+    The TIEBREAK RULE matches :func:`_probe_cells` (equal scores go to
+    the lowest cell id), but the scores themselves come from a BLAS
+    matmul while ``_probe_cells`` folds the cosine in SQL — last-ulp
+    score differences can yield tie-adjacent probe sets that differ
+    between the two paths (same caveat as documented on ``_fit_cells``)."""
     import numpy as np
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1585,18 +1608,11 @@ def _probe_cells_distributed(
     def _probe(batches):
         import pandas as pd
 
-        cu = cent_bc.value
-        take = min(n_probe, len(cu))
         for p in batches:
             if not len(p):
                 continue
-            V = np.stack(p["qid_vec"].to_numpy()).astype(np.float64)
-            V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            # stable argsort on the negated scores: equal scores keep
-            # ascending-cell order — the lowest-cell tiebreak of
-            # _probe_cells, fully vectorized across the batch
-            order = np.argsort(-(V @ cu.T), axis=1, kind="stable")[:, :take]
-            rep = np.repeat(np.arange(len(p)), take)
+            order = _probe_order(_unit_rows(_stack(p["qid_vec"])), cent_bc.value, n_probe)
+            rep = np.repeat(np.arange(len(p)), order.shape[1])
             yield pd.DataFrame({
                 "qid": p["qid"].to_numpy()[rep],
                 "__qv": p["qid_vec"].to_numpy()[rep],
@@ -1608,14 +1624,14 @@ def _probe_cells_distributed(
     ).mapInPandas(_probe, schema=f"qid {id_type}, __qv {vec_type}, __cell int")
 
 
-#: Auto cell_parts rule (the band_parts discipline of
-#: ``dedup._auto_band_parts`` carried over, VERDICT r11 #2): a quantizer
-#: cell is ONE cogroup task — AQE cannot split a pandas cogroup — so a
-#: hot cell (one dense embedding cluster) is a straggler at scale. Size
-#: parts so each (cell, part) task scores about this many corpus rows.
-#: 25k corpus rows/part tracks the sqrt-cell sizing norm (1e9-row
-#: corpus, ~31k cells of ~31k rows) and, with the query-side chunking
-#: inside ``_score_cell``, bounds the per-task score block at
+#: Auto split rule of the IVF cell join (the band_parts discipline of
+#: ``dedup._auto_band_parts``): a quantizer cell is ONE cogroup task —
+#: AQE cannot split a pandas cogroup — so a hot cell (one dense
+#: embedding cluster) is a straggler at scale. Size parts so each
+#: (cell, part) task scores about this many rows of a side. 25k rows
+#: per part tracks the sqrt-cell sizing norm (1e9-row corpus, ~31k
+#: cells of ~31k rows) and, with the query-side chunking inside
+#: :func:`_block_topk`, bounds the per-task score block at
 #: ``_IVF_Q_CHUNK x 25k`` doubles (~200 MB).
 _IVF_TARGET_CELL_ROWS = 25_000
 _IVF_MAX_CELL_PARTS = 256
@@ -1628,6 +1644,107 @@ _IVF_Q_CHUNK = 1024
 def _auto_cell_parts(n_rows: int) -> int:
     """ceil(n_rows / target-rows-per-task), clamped to [1, 256]."""
     return max(1, min(_IVF_MAX_CELL_PARTS, -(-n_rows // _IVF_TARGET_CELL_ROWS)))
+
+
+def _side_sample(df: DataFrame, vec_col: str, max_train_rows: int):
+    """One side's raw content-hash sample, ``(matrix, pre-cap row count,
+    hashes)`` as :func:`_hash_sampled_matrix` returns it, or ``(None, 0,
+    None)`` for an empty side: split sizing then degrades to no split,
+    never to an error (the join result is empty anyway)."""
+    try:
+        return _hash_sampled_matrix(
+            df.select(F.col(vec_col).cast("array<double>").alias("v")),
+            None, max_train_rows, return_count=True, return_hashes=True,
+        )
+    except ValueError:
+        return None, 0, None
+
+
+def _fanin_parts(X, n_rows: int, cent, take: int) -> dict[int, int]:
+    """Per-cell part counts for one side of the IVF cell join, from that
+    side's raw hash sample ``X`` (``None`` for an empty side) and its
+    pre-cap row count: each sample row counts toward its ``take``
+    nearest cells (1 for a corpus side's assignment, ``n_probe`` for a
+    probing side's fan-in), the counts scale to the side's size, and
+    :func:`_auto_cell_parts` sizes each cell. Exact counts would cost a
+    corpus-sized checkpoint or a second assignment scan; an estimate is
+    safe because the join result is identical at ANY parts, so sample
+    error only moves the straggler threshold, and a cell hot enough to
+    straggle is heavily represented in a uniform sample."""
+    import numpy as np
+
+    if X is None:
+        return {}
+    order = _probe_order(_unit_rows(X), cent, take)
+    counts = np.bincount(order.ravel(), minlength=len(cent))
+    scale = (n_rows or len(X)) / len(X)
+    return {c: _auto_cell_parts(int(counts[c] * scale)) for c in range(len(cent)) if counts[c] > 0}
+
+
+def _split_grid(
+    a: DataFrame, a_id: str, a_parts: dict, b: DataFrame, b_id: str, b_parts: dict, n_cells: int
+):
+    """The hot-cell 2D split grid of the IVF cell join. Cell ``c`` of
+    side ``a`` splits into ``a_parts[c]`` parts by a content hash of
+    ``a``'s own id (``pmod(xxhash64(id), parts)`` — deterministic and
+    layout-independent), and each ``a`` row is replicated across the
+    ``b_parts[c]`` parts of the other side (and symmetrically for
+    ``b``), so every (a, b) pair of a cell meets exactly once, in task
+    ``(cell, __ap, __bp)``. Missing cells have one part. Returns ``(a,
+    b, cogroup keys)``; with every part count at 1 both inputs come back
+    unchanged and the key is ``__cell`` alone.
+
+    Exactness: per-pair scores are block-composition-independent
+    (``_fold_matmul`` folds dims per pair), no pair is scored twice, and
+    a part's local top-k threshold is never above the unsplit cell's,
+    so the candidate set only grows and the exact global ranking returns
+    the unsplit result (digest-pinned by test). Cost: each row ships
+    once per part of the other side, in split cells only."""
+    if all(p <= 1 for p in (*a_parts.values(), *b_parts.values())):
+        return a, b, ["__cell"]
+    parts_df = a.sparkSession.createDataFrame(
+        [(c, a_parts.get(c, 1), b_parts.get(c, 1)) for c in range(n_cells)],
+        "__cell int, __an int, __bn int",
+    )
+
+    def grid(df, id_col, own, own_n, other, other_n):
+        return (
+            df.join(F.broadcast(parts_df), "__cell")
+            .withColumn(own, F.pmod(F.xxhash64(F.col(id_col)), F.col(own_n)).cast("int"))
+            # a sequence of ints explodes to int directly (a generator
+            # cannot nest inside a cast)
+            .withColumn(other, F.explode(F.sequence(F.lit(0), F.col(other_n) - F.lit(1))))
+            .drop("__an", "__bn")
+        )
+
+    return (
+        grid(a, a_id, "__ap", "__an", "__bp", "__bn"),
+        grid(b, b_id, "__bp", "__bn", "__ap", "__an"),
+        ["__cell", "__ap", "__bp"],
+    )
+
+
+def _block_topk(Q, ids_q, C, ids_c, k: int, include_self: bool = True) -> list:
+    """:func:`_local_topk_frames` of one IVF cell block: query rows ``Q``
+    against corpus rows ``C``, scored ``_IVF_Q_CHUNK`` queries at a time
+    so the score block stays bounded however many queries probe the
+    cell. The fold is :func:`cosine_topk`'s ``_fold_matmul`` left fold,
+    so scores are bit-identical to the broadcast path and the SQL twin;
+    per-pair scores and per-query top-k are chunk-independent, so the
+    chunking is invisible in the output."""
+    import numpy as np
+
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.dedup import _fold_matmul, _fold_norms
+
+    nc = _fold_norms(C)[None, :]
+    frames = []
+    for qs in range(0, len(Q), _IVF_Q_CHUNK):
+        Qb, ib = Q[qs : qs + _IVF_Q_CHUNK], ids_q[qs : qs + _IVF_Q_CHUNK]
+        cos = _fold_matmul(Qb, C) / (_fold_norms(Qb)[:, None] * nc)
+        if not include_self:
+            cos = np.where(ib[:, None] == ids_c[None, :], -np.inf, cos)
+        frames.extend(_local_topk_frames(ib, ids_c, cos, k))
+    return frames
 
 
 def ivf_knn_join(
@@ -1646,8 +1763,6 @@ def ivf_knn_join(
     max_train_rows: int = 100_000,
     cell_parts: int | None = None,
     query_parts: int | None = None,
-    _corpus_sizing=None,
-    _query_sizing=None,
 ) -> DataFrame:
     """Distributed approximate kNN JOIN between two large embedding
     corpora — the pool-scale sibling of :func:`cosine_topk`, with NO
@@ -1659,62 +1774,30 @@ def ivf_knn_join(
     assigns each corpus row its nearest cell and each query row its
     ``n_probe`` nearest cells (both Arrow-batched executor passes); the
     two sides then COGROUP on ``__cell`` and each cell scores as one
-    numpy block matmul — each corpus vector crosses the shuffle exactly
-    once and each query vector ``n_probe`` times (a pair-level join
-    would ship both vectors per CANDIDATE PAIR: measured 6x slower at
-    48k/side). Per (query, cell) only the local
-    top-k rows (with the same 2e-6 rounding slack as
-    :func:`cosine_topk`) leave Python; the exact global ranking runs
-    JVM-side on those few rows. The fold order inside the block matmul
-    is cosine_topk's left-fold, so scores are bit-identical to the
-    broadcast path and the SQL twin.
+    numpy block (:func:`_block_topk`) — each corpus vector crosses the
+    shuffle exactly once and each query vector ``n_probe`` times (a
+    pair-level join would ship both vectors per CANDIDATE PAIR: measured
+    6x slower at 48k/side). Per (query, cell) only the local top-k rows
+    (with the same 2e-6 rounding slack as :func:`cosine_topk`) leave
+    Python; the exact global ranking runs JVM-side on those few rows.
 
     Sizing: ``n_cells`` ~ sqrt(corpus rows) keeps cells executor-sized.
-    A hot cell is one cogroup task (AQE cannot split a group) — and a
-    skewed quantizer cell (one dense embedding cluster) would otherwise
-    be the straggler at 100 TB, since raising ``n_cells`` re-fits the
-    whole geometry. ``cell_parts`` is the in-operator lever (VERDICT
-    r11 #2, the ``band_parts`` pattern of ``lsh_write_index``): corpus
-    rows sub-split their cell by a content hash of the id
-    (``pmod(xxhash64(cid), parts)`` — deterministic, layout-
-    independent) and the query side replicates across the parts, so a
-    hot cell becomes ``parts`` independent tasks. EXACTNESS IS
-    UNCHANGED: per-pair scores are block-composition-independent
-    (``_fold_matmul`` folds dims per pair), each corpus row lands in
-    exactly one (cell, part) so no duplicate candidate pairs arise, a
-    part's local top-k threshold is never above the unsplit cell's, so
-    the candidate union only GROWS — and the exact global row_number
-    ranking then returns the identical top-k (digest-pinned by test).
-    ``cell_parts=None`` (default) sizes parts PER CELL from cell
-    populations ESTIMATED on the same bounded content-hash sample
-    discipline as the quantizer fit — when the fit runs in-call its
-    sample matrix and corpus count are REUSED outright (zero extra
-    passes; ADVICE r12), and with a caller-provided ``cent_df`` it is
-    one ``max_train_rows``-capped sample pass + the corpus count that
-    pass already pays — never a corpus-sized checkpoint or a second
-    assignment scan (estimation is
-    safe because the result is digest-identical at ANY parts value,
-    so sampling error only moves the straggler threshold, and a cell
-    hot enough to straggle is by definition heavily represented in a
-    uniform sample). All-cold corpora (every cell under
-    ``_IVF_TARGET_CELL_ROWS``) keep parts=1 everywhere and the plan is
-    the unsplit plan. ``cell_parts=1`` forces the unsplit path (no
-    sizing pass); an int > 1 splits EVERY cell uniformly (no sizing
-    pass — for when the caller knows the skew). Cost of a split: each
-    query row ships ``parts`` times for its hot cells only (per-cell
-    parts), nothing for cold ones.
+    A hot cell is one cogroup task (AQE cannot split a group), and
+    raising ``n_cells`` re-fits the whole geometry, so the operator
+    splits hot cells itself on the 2D grid of :func:`_split_grid`:
+    ``cell_parts`` sub-splits a cell's CORPUS rows (a dense embedding
+    cluster), ``query_parts`` its probing QUERIES (a hot query cluster,
+    the same straggler and task-memory shape on the other axis). Each
+    lever acts on its own side only: ``None`` (default) sizes parts per
+    cell from a content-hash sample of that side (:func:`_fanin_parts`;
+    one ``max_train_rows``-capped sample pass, except that the corpus
+    side reuses the in-call quantizer fit's sample when no ``cent_df``
+    is given), ``1`` keeps the
+    side unsplit with no sizing pass, and an int > 1 splits every cell
+    of that side uniformly. All-cold inputs (every cell under
+    ``_IVF_TARGET_CELL_ROWS``) keep the unsplit plan. The result is
+    digest-identical at ANY parts values.
 
-    ``query_parts`` is the SYMMETRIC lever for a hot QUERY cluster —
-    many queries probing one cell is the same straggler (and cogroup
-    task-memory) shape on the other axis. Query splitting is trivially
-    exact: distinct queries are independent, so sub-splitting a cell's
-    probing queries by ``pmod(xxhash64(qid), qp)`` and replicating the
-    cell's corpus rows per query-part changes no candidate set at all.
-    The two levers compose as a 2D grid — each (query, corpus) pair
-    meets exactly once, at ``(cell, hash(cid) mod cp, hash(qid) mod
-    qp)`` — and the same None/1/int>1 contract applies (None estimates
-    per-cell query fan-in on a capped content-hash query sample probed
-    driver-side with the executor probe's exact argsort).
     The quantizer fit is driver-side
     O(restarts · iters · min(sample, max_train_rows) · n_cells · dim);
     cap ``max_train_rows`` near 100-300 rows per cell (the FAISS
@@ -1728,22 +1811,14 @@ def ivf_knn_join(
     import numpy as np
     import pandas as pd
 
-    from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.dedup import _fold_matmul, _fold_norms
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    if cell_parts is not None and cell_parts < 1:
-        raise ValueError(f"cell_parts must be >= 1, got {cell_parts}")
-    if query_parts is not None and query_parts < 1:
-        raise ValueError(f"query_parts must be >= 1, got {query_parts}")
-    fit_X, fit_n = None, 0
+    _check_positive(k=k, n_probe=n_probe, cell_parts=cell_parts, query_parts=query_parts)
+    corpus_sample = None
     if cent_df is None:
         _, cent_df, fit_X, fit_n = _fit_cells(
             corpus, corpus_id, corpus_vec, n_cells, seed,
             max_train_rows=max_train_rows, return_sample=True,
         )
+        corpus_sample = (fit_X, fit_n)
     cent = _centroid_matrix(cent_df)
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(cent)
@@ -1757,147 +1832,28 @@ def ivf_knn_join(
     qcells = _probe_cells_distributed(fan_out(queries), query_id, query_vec, bc, n_probe)
     qid_type = queries.schema[query_id].dataType.simpleString()
 
-    # hot-cell split sizing (see docstring): per-cell parts from
-    # SAMPLE-ESTIMATED populations when the knob is None (exact counts
-    # would cost either a corpus-sized checkpoint or a second
-    # assignment pass; sizing is a pure performance lever — the result
-    # is digest-identical at ANY parts, so estimation error only
-    # shifts the straggler threshold), uniform when an int > 1. The
-    # split is 2D: ``pmap`` sub-splits a cell's CORPUS rows (content
-    # hash of cid), ``qmap`` its probing QUERIES (content hash of qid)
-    # — a hot QUERY cluster is the same straggler/task-memory shape on
-    # the other axis, and query splitting is trivially exact (distinct
-    # queries are independent; each (q, c) pair still meets exactly
-    # once, at (cell, hash(cid) mod cp, hash(qid) mod qp)). An empty
-    # side makes the sizing sample raise; that degrades to no split,
-    # never to an error (the join result is empty anyway).
-    pmap: dict[int, int] = {}
-    qmap: dict[int, int] = {}
-    if cell_parts is None:
-        # When the quantizer fit ran in-call, its unit-normalized sample
-        # and corpus count ARE the sizing inputs — reuse them instead of
-        # re-running the identical content-hash sample pass (ADVICE r12).
-        # ``_corpus_sizing`` is the caller-side variant of the same reuse
-        # (r13, margin_mine_ivf: the raw hash sample of each side is
-        # taken once and fed to both directions' joins): a (raw matrix,
-        # pre-cap count) tuple exactly as _hash_sampled_matrix returns,
-        # or (None, 0) for a side known to be empty.
-        if _corpus_sizing is not None:
-            Xc, n_corpus = _corpus_sizing
-            Xu = (
-                Xc / np.maximum(np.linalg.norm(Xc, axis=1, keepdims=True), 1e-12)
-                if Xc is not None
-                else None
-            )
-        elif fit_X is not None:
-            Xu, n_corpus = fit_X, fit_n
-        else:
-            try:
-                X, n_corpus = _hash_sampled_matrix(
-                    corpus.select(F.col(corpus_vec).cast("array<double>").alias("v")),
-                    None, max_train_rows, return_count=True,
-                )
-                Xu = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            except ValueError:
-                Xu, n_corpus = None, 0
-        if Xu is not None:
-            scounts = np.bincount(_assign_cells(Xu, cent), minlength=len(cent))
-            scale = (n_corpus or len(Xu)) / max(len(Xu), 1)
-            pmap = {
-                c: _auto_cell_parts(int(scounts[c] * scale))
-                for c in range(len(cent))
-                if scounts[c] > 0
-            }
-    elif cell_parts > 1:
-        pmap = {c: int(cell_parts) for c in range(len(cent))}
-    if query_parts is None:
-        if _query_sizing is not None:
-            Xq, n_q = _query_sizing
-        else:
-            try:
-                Xq, n_q = _hash_sampled_matrix(
-                    queries.select(F.col(query_vec).cast("array<double>").alias("v")),
-                    None, max_train_rows, return_count=True,
-                )
-            except ValueError:
-                Xq, n_q = None, 0
-        if Xq is not None:
-            Xqu = Xq / np.maximum(np.linalg.norm(Xq, axis=1, keepdims=True), 1e-12)
-            take = min(n_probe, len(cent))
-            # same normalized-centroid stable argsort as the executor
-            # probe, so the estimated fan-in matches the real one
-            order = np.argsort(-(Xqu @ cent.T), axis=1, kind="stable")[:, :take]
-            qcounts = np.bincount(order.ravel(), minlength=len(cent))
-            qscale = (n_q or len(Xq)) / max(len(Xq), 1)
-            qmap = {
-                c: _auto_cell_parts(int(qcounts[c] * qscale))
-                for c in range(len(cent))
-                if qcounts[c] > 0
-            }
-    elif query_parts > 1:
-        qmap = {c: int(query_parts) for c in range(len(cent))}
-    split = any(p > 1 for p in pmap.values()) or any(p > 1 for p in qmap.values())
-    if split:
-        parts_df = spark.createDataFrame(
-            [(c, pmap.get(c, 1), qmap.get(c, 1)) for c in range(len(cent))],
-            "__cell int, __cp int, __qp int",
-        )
-        assigned = (
-            assigned.join(F.broadcast(parts_df), "__cell")
-            .withColumn(
-                "__part",
-                F.pmod(F.xxhash64(F.col("cid")), F.col("__cp")).cast("int"),
-            )
-            .withColumn(
-                "__qpart",
-                # sequence of ints explodes to int directly (a generator
-                # cannot nest inside a cast)
-                F.explode(F.sequence(F.lit(0), F.col("__qp") - F.lit(1))),
-            )
-            .drop("__cp", "__qp")
-        )
-        qcells = (
-            qcells.join(F.broadcast(parts_df), "__cell")
-            .withColumn(
-                "__qpart",
-                F.pmod(F.xxhash64(F.col("qid")), F.col("__qp")).cast("int"),
-            )
-            .withColumn(
-                "__part",
-                F.explode(F.sequence(F.lit(0), F.col("__cp") - F.lit(1))),
-            )
-            .drop("__cp", "__qp")
-        )
+    def side_parts(parts, df, vec, take, sample=None):
+        if parts is not None:
+            return dict.fromkeys(range(len(cent)), parts)
+        X, n_rows = sample or _side_sample(df, vec, max_train_rows)[:2]
+        return _fanin_parts(X, n_rows, cent, take)
 
-    def _empty(lq: pd.DataFrame, rc: pd.DataFrame) -> pd.DataFrame:
+    pmap = side_parts(cell_parts, corpus, corpus_vec, 1, corpus_sample)
+    qmap = side_parts(query_parts, queries, query_vec, n_probe)
+    qcells, assigned, keys = _split_grid(qcells, "qid", qmap, assigned, "cid", pmap, len(cent))
+
+    def _score_cell(lq: pd.DataFrame, rc: pd.DataFrame) -> pd.DataFrame:
+        frames = []
+        if len(lq) and len(rc):
+            frames = _block_topk(
+                _stack(lq["__qv"]), lq["qid"].to_numpy(),
+                _stack(rc["__cv"]), rc["cid"].to_numpy(), k, include_self,
+            )
+        if frames:
+            return pd.concat(frames, ignore_index=True)
         return pd.DataFrame({"qid": lq["qid"].iloc[:0], "cid": rc["cid"].iloc[:0],
                              "cos": np.array([], dtype=np.float64)})
 
-    def _score_cell(lq: pd.DataFrame, rc: pd.DataFrame) -> pd.DataFrame:
-        if not len(lq) or not len(rc):
-            return _empty(lq, rc)
-        Q = np.stack(lq["__qv"].to_numpy()).astype(np.float64)
-        C = np.stack(rc["__cv"].to_numpy()).astype(np.float64)
-        ids_q = lq["qid"].to_numpy()
-        ids_c = rc["cid"].to_numpy()
-        nc = _fold_norms(C)[None, :]
-        frames = []
-        # chunk the query axis so the score block is bounded at
-        # _IVF_Q_CHUNK x |cell part| doubles regardless of how many
-        # queries probe this cell — per-pair scores and per-query
-        # top-k are chunk-independent, so this is invisible in the
-        # output (the Q x C matrix of the unchunked path never needs
-        # to exist at once)
-        for qs in range(0, len(Q), _IVF_Q_CHUNK):
-            Qb = Q[qs : qs + _IVF_Q_CHUNK]
-            ib = ids_q[qs : qs + _IVF_Q_CHUNK]
-            cos = _fold_matmul(Qb, C) / (_fold_norms(Qb)[:, None] * nc)
-            if not include_self:
-                cos = np.where(ib[:, None] == ids_c[None, :], -np.inf, cos)
-            frames.extend(_local_topk_frames(ib, ids_c, cos, k))
-        return pd.concat(frames, ignore_index=True) if frames else _empty(lq, rc)
-
-    keys = ["__cell", "__part", "__qpart"] if split else ["__cell"]
     scored = (
         qcells.groupBy(*keys)
         .cogroup(assigned.groupBy(*keys))
@@ -1913,30 +1869,27 @@ def _probe_assign_mapper(cent_bc, n_probe: int):
     executor pass: the row's nearest-cell ASSIGNMENT (corpus role —
     the exact ``_assign_cells`` call :func:`_cell_assign_mapper` makes)
     and its ``n_probe`` nearest PROBE cells (query role — the exact
-    stable argsort :func:`_probe_cells_distributed` runs). Emits one
-    row per (input row, cell) with two role flags; the assignment cell
-    is normally ``order[0]`` of the probe set, so the output is
+    :func:`_probe_order` :func:`_probe_cells_distributed` runs). Emits
+    one row per (input row, cell) with two role flags; the assignment
+    cell is normally ``order[0]`` of the probe set, so the output is
     ``n_probe`` rows per input row — an extra assignment-only row is
     emitted only if BLAS last-ulp differences between the argmax and
     the argsort paths ever diverge (same caveat as documented on
-    ``_probe_cells_distributed``), so neither role can silently change
-    versus the two-pass formulation this replaces (r14: 2 scans per
-    side -> 1)."""
+    ``_probe_cells_distributed``), so each role is exactly the cell set
+    :func:`ivf_knn_join` computes for it."""
     import numpy as np
 
     def _f(batches):
         import pandas as pd
 
         cu = cent_bc.value
-        take = min(n_probe, len(cu))
         for p in batches:
             if not len(p):
                 continue
-            V = np.stack(p["__v"].to_numpy()).astype(np.float64)
-            V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            order = np.argsort(-(V @ cu.T), axis=1, kind="stable")[:, :take]
+            V = _unit_rows(_stack(p["__v"]))
+            order = _probe_order(V, cu, n_probe)
             acell = _assign_cells(V, cu)
-            rep = np.repeat(np.arange(len(p)), take)
+            rep = np.repeat(np.arange(len(p)), order.shape[1])
             cells = order.ravel().astype(np.int32)
             probe = np.ones(len(cells), dtype=bool)
             assigned = cells == acell[rep].astype(np.int32)
@@ -1971,12 +1924,10 @@ def margin_mine_ivf(
     n_probe: int = 4,
     seed: int = 42,
     max_train_rows: int = 100_000,
-    cell_parts: int | None = None,
-    query_parts: int | None = None,
 ) -> DataFrame:
     """Pool-scale :func:`margin_mine`: identical margin criterion and
     output contract, but the kNN passes run through the distributed
-    IVF machinery — no query-side collect/broadcast, so BOTH corpora
+    IVF cell join — no query-side collect/broadcast, so BOTH corpora
     may exceed ``margin_mine``'s ``max_query_rows`` cap (mining all of
     a 100 TB left corpus against a 100 TB right one).
 
@@ -1985,32 +1936,23 @@ def margin_mine_ivf(
     passes share one cell geometry (a per-side fit would make the two
     probe sets inconsistent near cell borders for no recall gain).
 
-    Execution (r14): forward and backward kNN share ONE cogroup pass.
-    Each side is scanned once by :func:`_probe_assign_mapper`, which
-    emits the row under both quantizer roles (its assignment cell =
-    corpus role, its ``n_probe`` probe cells = query role, exactly the
-    cells the two per-direction :func:`ivf_knn_join` calls would
-    compute); one ``applyInPandas`` per cell then scores the forward
-    block (left probes x right assignments) AND the backward block
-    (right probes x left assignments) with the same chunked
-    ``_fold_matmul`` fold, so per-pair scores stay bit-identical to
-    the per-direction joins. The scored candidates are pinned once
-    (lazy localCheckpoint) and ranked per direction with the exact
-    windows :func:`_rank_probe_hits` uses. Versus two ``ivf_knn_join``
-    calls: 4 full-side scans -> 2, 2 cell cogroups -> 1, one shared
-    candidate materialization instead of two.
+    Execution: forward and backward kNN share ONE cogroup pass. Each
+    side is scanned once by :func:`_probe_assign_mapper`, which emits
+    the row under both quantizer roles (its assignment cell = corpus
+    role, its ``n_probe`` probe cells = query role, exactly the cells
+    :func:`ivf_knn_join` would compute per direction); one
+    ``applyInPandas`` per cell then scores the forward block (left
+    probes x right assignments) AND the backward block (right probes x
+    left assignments) with :func:`_block_topk`, so per-pair scores are
+    bit-identical to the per-direction joins. The scored candidates are
+    pinned once (lazy localCheckpoint) and ranked per direction with
+    the exact windows :func:`_rank_probe_hits` uses.
 
-    Hot-cell splits: ``cell_parts``/``query_parts`` become per-side
-    lower bounds on a 2D (left-part, right-part) grid per cell — each
-    side sub-splits by a content hash of its id and replicates across
-    the other side's parts, so every (l, r) pair still meets exactly
-    once and the result is digest-identical at ANY parts value (the
-    per-task local top-k threshold is never above the unsplit cell's,
-    so candidates only grow, and the exact global ranking is
-    unchanged — the same argument as ``ivf_knn_join``'s levers).
-    ``None`` sizes parts per cell from the sides' probe fan-in on the
-    already-paid hash samples (probe sets contain the assignment cell,
-    so the probe fan-in bounds both roles' populations).
+    Hot cells split on the 2D grid of :func:`_split_grid`, sized per
+    side and per cell by :func:`_fanin_parts` from the side's probe
+    fan-in on the already-paid hash samples (a probe set contains the
+    assignment cell, so the fan-in bounds both roles' populations).
+    The result is digest-identical at any split.
 
     Approximation scope: the kNN sets (candidates AND the margin's
     kNN-average normalizers) are IVF-approximate; with
@@ -2021,53 +1963,33 @@ def margin_mine_ivf(
     import numpy as np
     import pandas as pd
 
-    from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.dedup import _fold_matmul, _fold_norms
-
-    if knn_k < 1:
-        raise ValueError(f"knn_k must be >= 1, got {knn_k}")
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    if cell_parts is not None and cell_parts < 1:
-        raise ValueError(f"cell_parts must be >= 1, got {cell_parts}")
-    if query_parts is not None and query_parts < 1:
-        raise ValueError(f"query_parts must be >= 1, got {query_parts}")
+    _check_positive(knn_k=knn_k, n_probe=n_probe)
     union_vecs = left.select(F.col(left_vec).alias("embedding")).unionByName(
         right.select(F.col(right_vec).alias("embedding"))
     )
-    # ONE content-hash sample pass per side (r13). Each side's raw
-    # sample serves three consumers that previously paid their own
-    # passes: the union quantizer fit (the union's lowest-hash
-    # max_train_rows rows are a subset of the two sides' lowest-hash
-    # sets — merge by hash, truncate), the forward pass's sizing
-    # estimators, and the backward pass's (roles swapped). The merge
-    # equals sampling the union outright PROVIDED each side's
-    # 1.05x+64-slack hash threshold retained min(n, max_train_rows)
-    # rows — overwhelmingly probable, not guaranteed (ADVICE r13); in
-    # the tail the merged fit sees marginally fewer union rows, which
-    # only steers recall (centroids never affect returned scores).
-    def _side_sample(df: DataFrame, vec: str):
-        try:
-            return _hash_sampled_matrix(
-                df.select(F.col(vec).cast("array<double>").alias("v")),
-                None, max_train_rows, return_count=True, return_hashes=True,
-            )
-        except ValueError:
-            return None, 0, None
-
-    # The two sides' sample passes (a count + a capped collect each) are
-    # independent — submit them from two driver threads so the second
-    # side's jobs back-fill the first's stragglers (guide §2.6). Each
-    # target is wrapped so its jobs keep the caller's JVM local
+    # ONE content-hash sample pass per side feeds the union quantizer
+    # fit (the union's lowest-hash max_train_rows rows are a subset of
+    # the two sides' lowest-hash sets — merge by hash, truncate) and
+    # that side's split sizing. The merge equals sampling the union
+    # outright PROVIDED each side's 1.05x+64-slack hash threshold
+    # retained min(n, max_train_rows) rows — overwhelmingly probable,
+    # not guaranteed; in the tail the merged fit sees marginally fewer
+    # union rows, which only steers recall (centroids never affect
+    # returned scores). The two passes (a count + a capped collect each)
+    # are independent — submit them from two driver threads so the
+    # second side's jobs back-fill the first's stragglers. Each target
+    # is wrapped on its own so its jobs keep the caller's JVM local
     # properties (job group, description, scheduler pool).
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fl = pool.submit(inheritable_thread_target(left.sparkSession)(_side_sample), left, left_vec)
-        fr = pool.submit(inheritable_thread_target(left.sparkSession)(_side_sample), right, right_vec)
-        XL, nL, uL = fl.result()
-        XR, nR, uR = fr.result()
+        futures = [
+            pool.submit(inheritable_thread_target(left.sparkSession)(_side_sample), df, vec, max_train_rows)
+            for df, vec in ((left, left_vec), (right, right_vec))
+        ]
+        (XL, nL, uL), (XR, nR, uR) = (f.result() for f in futures)
     if XL is None and XR is None:
         raise ValueError(
             "cannot fit a quantizer on an empty (or fully sampled-out) corpus"
@@ -2087,7 +2009,7 @@ def margin_mine_ivf(
     )
     # unit-normalize driver-side — the exact op (and values)
     # _centroid_matrix would recover from cent_df, without its collect job
-    cent = cent_raw / np.maximum(np.linalg.norm(cent_raw, axis=1, keepdims=True), 1e-12)
+    cent = _unit_rows(cent_raw)
     spark = left.sparkSession
     bc = spark.sparkContext.broadcast(cent)
 
@@ -2109,82 +2031,29 @@ def margin_mine_ivf(
         schema=f"id {rid_type}, __v {rvec_type}, __cell int, "
                "__probe boolean, __assigned boolean",
     )
-
-    # Per-cell per-side part counts for the 2D split grid, estimated on
-    # the already-paid hash samples (sizing is a pure performance lever
-    # — digest-identical at any parts value — so sample error only
-    # moves the straggler threshold). A side's probe fan-in bounds both
-    # its roles per cell: the probe set contains the assignment cell.
-    def _side_parts(X, n_rows, floor: int | None) -> dict[int, int]:
-        parts: dict[int, int] = {}
-        if X is not None:
-            Xu = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            take = min(n_probe, len(cent))
-            order = np.argsort(-(Xu @ cent.T), axis=1, kind="stable")[:, :take]
-            counts = np.bincount(order.ravel(), minlength=len(cent))
-            scale = (n_rows or len(X)) / max(len(X), 1)
-            parts = {
-                c: _auto_cell_parts(int(counts[c] * scale))
-                for c in range(len(cent))
-                if counts[c] > 0
-            }
-        if floor is not None and floor > 1:
-            parts = {c: max(parts.get(c, 1), floor) for c in range(len(cent))}
-        return parts
-
-    explicit = None
-    if cell_parts is not None or query_parts is not None:
-        explicit = max(cell_parts or 1, query_parts or 1)
-    if explicit == 1:
-        pl_map: dict[int, int] = {}
-        pr_map: dict[int, int] = {}
-    else:
-        pl_map = _side_parts(XL, nL, explicit)
-        pr_map = _side_parts(XR, nR, explicit)
-    split = any(p > 1 for p in pl_map.values()) or any(p > 1 for p in pr_map.values())
-    if split:
-        parts_df = spark.createDataFrame(
-            [(c, pl_map.get(c, 1), pr_map.get(c, 1)) for c in range(len(cent))],
-            "__cell int, __pl int, __pr int",
-        )
-        lrows = (
-            lrows.join(F.broadcast(parts_df), "__cell")
-            .withColumn("__lp", F.pmod(F.xxhash64(F.col("id")), F.col("__pl")).cast("int"))
-            .withColumn("__rp", F.explode(F.sequence(F.lit(0), F.col("__pr") - F.lit(1))))
-            .drop("__pl", "__pr")
-        )
-        rrows = (
-            rrows.join(F.broadcast(parts_df), "__cell")
-            .withColumn("__rp", F.pmod(F.xxhash64(F.col("id")), F.col("__pr")).cast("int"))
-            .withColumn("__lp", F.explode(F.sequence(F.lit(0), F.col("__pl") - F.lit(1))))
-            .drop("__pl", "__pr")
-        )
+    lrows, rrows, keys = _split_grid(
+        lrows, "id", _fanin_parts(XL, nL, cent, n_probe),
+        rrows, "id", _fanin_parts(XR, nR, cent, n_probe), len(cent),
+    )
 
     def _score_bidir(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
         frames: list = []
-
-        def one_dir(q: pd.DataFrame, c: pd.DataFrame, swap: bool, d: int) -> None:
+        # forward: left probes x right assignments; backward: the reverse,
+        # with the (query, corpus) ids swapped back into (l, r)
+        for d, q, c in (
+            (0, l[l["__probe"]], r[r["__assigned"]]),
+            (1, r[r["__probe"]], l[l["__assigned"]]),
+        ):
             if not len(q) or not len(c):
-                return
-            Q = np.stack(q["__v"].to_numpy()).astype(np.float64)
-            C = np.stack(c["__v"].to_numpy()).astype(np.float64)
-            ids_q = q["id"].to_numpy()
-            ids_c = c["id"].to_numpy()
-            ncv = _fold_norms(C)[None, :]
-            for qs in range(0, len(Q), _IVF_Q_CHUNK):
-                Qb = Q[qs : qs + _IVF_Q_CHUNK]
-                ib = ids_q[qs : qs + _IVF_Q_CHUNK]
-                cos = _fold_matmul(Qb, C) / (_fold_norms(Qb)[:, None] * ncv)
-                for fr in _local_topk_frames(ib, ids_c, cos, knn_k):
-                    frames.append(pd.DataFrame({
-                        "__dir": d,
-                        "l": fr["cid"] if swap else fr["qid"],
-                        "r": fr["qid"] if swap else fr["cid"],
-                        "cos": fr["cos"],
-                    }))
-
-        one_dir(l[l["__probe"]], r[r["__assigned"]], False, 0)  # forward
-        one_dir(r[r["__probe"]], l[l["__assigned"]], True, 1)   # backward
+                continue
+            Q, C = _stack(q["__v"]), _stack(c["__v"])
+            for fr in _block_topk(Q, q["id"].to_numpy(), C, c["id"].to_numpy(), knn_k):
+                frames.append(pd.DataFrame({
+                    "__dir": d,
+                    "l": fr["cid"] if d else fr["qid"],
+                    "r": fr["qid"] if d else fr["cid"],
+                    "cos": fr["cos"],
+                }))
         if frames:
             return pd.concat(frames, ignore_index=True)
         return pd.DataFrame({
@@ -2194,7 +2063,6 @@ def margin_mine_ivf(
             "cos": np.array([], dtype=np.float64),
         })
 
-    keys = ["__cell", "__lp", "__rp"] if split else ["__cell"]
     scored = (
         lrows.groupBy(*keys)
         .cogroup(rrows.groupBy(*keys))
@@ -2263,8 +2131,7 @@ def ndcg_binary(
     Returns ``(query_col, hits, n_relevant, ndcg)``; ``ndcg`` NULL for
     queries with no relevant docs anywhere (ideal DCG undefined).
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _check_positive(k=k)
     w_micro = (
         f"CAST(round(1000000 * ln(2) / ln({rank_col} + 1), 0) AS BIGINT)"
     )
@@ -2338,8 +2205,7 @@ def ndcg_graded(
     Returns ``(query_col, graded_hits, n_graded, ndcg)``; ``ndcg``
     NULL for queries with no positively-graded doc anywhere.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _check_positive(k=k)
     if not (0 < max_grade <= 40):
         raise ValueError(f"max_grade must be in (0, 40], got {max_grade}")
     w_micro = f"CAST(round(1000000 * ln(2) / ln({rank_col} + 1), 0) AS BIGINT)"

@@ -86,11 +86,9 @@ class StreamingNearDup:
     def _path(self, name: str) -> str:
         return os.path.join(self.base, name)
 
-    def _write_epoch(self, df: DataFrame, path: str, epoch_id) -> None:
-        if epoch_id is None:
-            df.write.mode("append").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
+    def _write_epoch(self, df: DataFrame, path: str, epoch_id: int) -> None:
+        """Overwrite into an epoch-named subdir (idempotent replay)."""
+        df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
 
     def _read(self, name: str, schema: str) -> DataFrame:
         path = self._path(name)
@@ -145,7 +143,7 @@ class StreamingNearDup:
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         meta = self._meta()
         last = meta.get("last_epoch")
-        if epoch_id is not None and last is not None and int(epoch_id) <= int(last):
+        if last is not None and int(epoch_id) <= int(last):
             return
 
         batch = batch_df.select(
@@ -208,7 +206,7 @@ class StreamingNearDup:
                          F.lit(None).cast("double").alias("jaccard"))
             .unionByName(intra_dups.select("id", "dup_of", "jaccard"))
             .unionByName(cross_dups.select("id", "dup_of", "jaccard"))
-            .withColumn("__epoch", F.lit(int(epoch_id) if epoch_id is not None else 0).cast("long"))
+            .withColumn("__epoch", F.lit(int(epoch_id)).cast("long"))
         )
         self._write_epoch(decisions, self._path("out"), epoch_id)
         self._write_epoch(novel.select(F.col("id").cast("long"), "text"), self._path("docs"), epoch_id)
@@ -219,7 +217,7 @@ class StreamingNearDup:
             self._path("bands"),
             epoch_id,
         )
-        meta["last_epoch"] = int(epoch_id) if epoch_id is not None else None
+        meta["last_epoch"] = int(epoch_id)
         self._save_meta(meta)
 
     # -- results --------------------------------------------------------------

@@ -98,11 +98,9 @@ class StreamingTopN:
     def _out_path(self) -> str:
         return os.path.join(self.base, "out")
 
-    def _write_epoch(self, df: DataFrame, path: str, epoch_id) -> None:
-        if epoch_id is None:
-            df.write.mode("append").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
+    def _write_epoch(self, df: DataFrame, path: str, epoch_id: int) -> None:
+        """Overwrite into an epoch-named subdir (idempotent replay)."""
+        df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
 
     def _read_state_raw(self) -> DataFrame:
         path = self._state_path()
@@ -158,12 +156,12 @@ class StreamingTopN:
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         meta = self._load_meta()
         last = meta.get("last_epoch")
-        if epoch_id is not None and last is not None and int(epoch_id) <= int(last):
+        if last is not None and int(epoch_id) <= int(last):
             return
 
         batch = latest_per_key(
             batch_df, self.keys, [self.version], op_col=None  # keep deletes as rows
-        ).withColumn("__epoch", F.lit(int(epoch_id) if epoch_id is not None else 0).cast("long"))
+        ).withColumn("__epoch", F.lit(int(epoch_id)).cast("long"))
         batch = batch.localCheckpoint(eager=True)  # consumed 4× below
 
         prior_raw = self._read_state_raw()
@@ -197,24 +195,20 @@ class StreamingTopN:
             .withColumn("__op", F.lit("D"))
         )
         out = upserts.unionByName(deletes).withColumn(
-            "__out_epoch", F.lit(int(epoch_id) if epoch_id is not None else 0).cast("long")
+            "__out_epoch", F.lit(int(epoch_id)).cast("long")
         )
         self._write_epoch(out, self._out_path(), epoch_id)
 
         # append the batch to the state log; periodically rewrite compacted
         self._write_epoch(batch, self._state_path(), epoch_id)
-        if (
-            epoch_id is not None
-            and self.compact_every
-            and int(epoch_id) % self.compact_every == self.compact_every - 1
-        ):
+        if self.compact_every and int(epoch_id) % self.compact_every == self.compact_every - 1:
             compacted = self._compact(self._read_state_raw()).localCheckpoint(eager=True)
             tmp = self._state_path() + ".compact"
             compacted.write.mode("overwrite").parquet(tmp)
             shutil.rmtree(self._state_path())
             os.replace(tmp, self._state_path())
 
-        meta["last_epoch"] = int(epoch_id) if epoch_id is not None else None
+        meta["last_epoch"] = int(epoch_id)
         self._save_meta(meta)
 
     # -- results --------------------------------------------------------------

@@ -373,3 +373,26 @@ def test_margin_mine_ivf_side_samples_keep_the_callers_job_group(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
     assert tracker.getJobIdsForGroup("margin-ivf")
+
+
+def test_margin_mine_ivf_split_grid_digest_equal(spark, monkeypatch):
+    """margin_mine_ivf sizes its 2D split grid per side from the hash
+    samples: on two skewed corpora the sizing must split a hot cell,
+    and the split result must equal the unsplit one row for row."""
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators import similarity
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.similarity import margin_mine_ivf
+
+    l, r = _skewed_corpora(spark, seed=3), _skewed_corpora(spark, seed=5)
+    key = lambda df: sorted(tuple(x) for x in df.collect())  # noqa: E731
+    base = key(margin_mine_ivf(l, r, "vec_id", "vec_id", knn_k=3, n_cells=4, n_probe=2))
+    monkeypatch.setattr(similarity, "_IVF_TARGET_CELL_ROWS", 16)
+    sized = []
+    orig = similarity._auto_cell_parts
+    monkeypatch.setattr(
+        similarity, "_auto_cell_parts", lambda n: sized.append(n) or orig(n)
+    )
+    split = key(margin_mine_ivf(l, r, "vec_id", "vec_id", knn_k=3, n_cells=4, n_probe=2))
+    assert sized and max(orig(n) for n in sized) > 1, (
+        "auto sizing never split a hot cell"
+    )
+    assert split == base and len(base) == 100
