@@ -312,7 +312,7 @@ def read_pruned(
     same order of driver state as Delta's log replay). Empty survivor
     set returns an empty DataFrame with the source schema.
     """
-    from data_pipeline_evolution_batch_streaming_apache_flink_spark.sources.batch import _nano_timestamp_cols, read_parquet
+    from data_pipeline_evolution_batch_streaming_apache_flink_spark.sources.batch import _footer_schema, _read
 
     cond = F.lit(True)
     for c, (lo, hi) in ranges.items():
@@ -321,20 +321,12 @@ def read_pruned(
         if hi is not None:
             cond = cond & (F.col(f"min_{c}") <= F.lit(hi))
     files = [r["file"] for r in manifest.where(cond).select("file").collect()]
-    base = read_parquet(spark, path)
+    # read_parquet's footer schema and nano normalization, from the
+    # directory's footer (per-file schemas are identical by contract)
+    schema, nano_cols = _footer_schema(spark, path)
     if not files:
-        return base.limit(0)
-    # same nano-timestamp normalization as read_parquet, against the
-    # directory's schema (per-file schemas are identical by contract)
-    try:
-        nano_cols = _nano_timestamp_cols(path)
-    except Exception:
-        nano_cols = []
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    out = spark.read.parquet(*files)
-    for c in nano_cols:
-        out = out.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+        return _read(spark, schema, nano_cols, path).limit(0)
+    out = _read(spark, schema, nano_cols, *files)
     for c, (lo, hi) in ranges.items():
         if lo is not None:
             out = out.where(F.col(c) >= F.lit(lo))

@@ -1,44 +1,162 @@
-"""Batch parquet source with type normalization.
+"""Batch parquet source: schema from the footer, type normalization.
+
+``read_parquet`` reads the footer of one data file on the driver
+(pyarrow, O(schema): independent of data volume) and hands Spark the
+schema that footer proves, so building the DataFrame starts no Spark
+job. Without a schema, ``spark.read.parquet`` runs a schema-inference
+job to read that same footer, even for a single file: on a chain of
+short queries that job is the largest fixed cost per read.
 
 Spark (through 4.x) refuses parquet INT64 TIMESTAMP(NANOS) columns
 (PARQUET_TYPE_ILLEGAL) that other engines (DuckDB, pyarrow) read fine.
 ``read_parquet`` reads them as raw nanos (legacy conf) and converts to
 microsecond timestamps, so downstream plans see ordinary TIMESTAMP
-columns. Detection uses one driver-side footer read (pyarrow), which is
-O(schema) — independent of data volume, safe at 100 TB.
+columns.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+# Footer key under which Spark stores the schema of the files it writes.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# Session confs under which Spark's inference departs from the footer
+# mapping below, with the value that keeps it; any other value hands
+# the read to Spark's inference.
+_INFERENCE_CONFS = {
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.int96AsTimestamp": "true",
+    "spark.sql.parquet.mergeSchema": "false",
+}
 
 
-def _nano_timestamp_cols(path: str) -> list[str]:
+def _provable(t) -> bool:
+    """Whether Spark infers exactly ``from_arrow_type(t)`` for a parquet
+    column pyarrow reads as ``t``. Unsigned, time, duration, float16,
+    fixed-size binary, date64 and null columns are left to Spark."""
+    import pyarrow.types as pat
+
+    if pat.is_struct(t):
+        return all(_provable(f.type) for f in t)
+    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
+        return _provable(t.value_type)
+    if pat.is_map(t):
+        return _provable(t.key_type) and _provable(t.item_type)
+    if pat.is_dictionary(t):
+        return _provable(t.value_type)
+    return any(is_(t) for is_ in (
+        pat.is_boolean, pat.is_signed_integer, pat.is_float32, pat.is_float64,
+        pat.is_decimal128, pat.is_string, pat.is_large_string, pat.is_binary,
+        pat.is_large_binary, pat.is_date32, pat.is_timestamp,
+    ))
+
+
+def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType | None, list[str]]:
+    """(schema, nano columns) from the footer of the first data file
+    under ``path``. ``schema`` is the one Spark's inference gives, or
+    None where the footer cannot prove it. ``nano columns`` are the
+    top-level INT64 TIMESTAMP(NANOS) columns, typed LongType in the
+    schema (what Spark reads under ``nanosAsLong``)."""
+    from urllib.parse import urlparse
+
+    from pyspark.sql.pandas.types import from_arrow_schema
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    schema = ds.dataset(path, format="parquet").schema
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` that tolerates TIMESTAMP(NANOS) columns,
-    converting them to micros (truncation — same as DuckDB's ns->us)."""
+    if urlparse(path).scheme not in ("", "file"):
+        # a remote store: Spark reaches it through its own filesystem
+        # config; pyarrow would try its own client and credentials
+        return None, []
     try:
-        nano_cols = _nano_timestamp_cols(path)
-    except Exception:
-        nano_cols = []
+        frag = next(ds.dataset(path, format="parquet").get_fragments(), None)
+        if frag is None:  # no data file: Spark's inference raises its error
+            return None, []
+        meta = frag.metadata
+        arrow = frag.physical_schema
+    except (OSError, pa.ArrowException):  # missing path, glob, not parquet
+        return None, []
+    inferred_as_mapped = all(
+        spark.conf.get(k, v).lower() == v for k, v in _INFERENCE_CONFS.items()
+    )
+    stored = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:  # Spark-written: readSchemaFromFooter takes it as is
+        try:
+            return (StructType.fromJson(json.loads(stored)) if inferred_as_mapped else None), []
+        except (ValueError, KeyError, TypeError):  # not the JSON form
+            return None, []
+    nanos, int96, nested = [], set(), False
+    for col in meta.schema:
+        unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+        if col.physical_type != "INT96" and unit != "nanoseconds":
+            continue
+        if col.path != col.name:
+            nested = True  # nanos or INT96 inside a nested column
+        elif col.physical_type == "INT96":
+            int96.add(col.name)
+        else:
+            nanos.append(col.name)
+    if nested or not inferred_as_mapped or not all(_provable(t) for t in arrow.types):
+        return None, nanos
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower() == "true"
+    schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+    return StructType([
+        StructField(f.name, LongType()) if f.name in nanos
+        else StructField(f.name, TimestampType()) if f.name in int96
+        else f
+        for f in schema
+    ]), nanos
+
+
+def _read(spark: SparkSession, schema: StructType | None, nano_cols: list[str], *paths: str) -> DataFrame:
+    """Read ``paths`` with ``_footer_schema``'s result (None: Spark
+    infers) and convert the nano columns to micros."""
     if nano_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(*paths)
     for c in nano_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from one
+    driver-side footer read, so it starts no Spark job, and with
+    TIMESTAMP(NANOS) columns converted to micros (truncation, the same
+    as DuckDB's ns->us).
+
+    The footer of the first data file decides the schema:
+
+    - a Spark-written file carries its schema under
+      ``org.apache.spark.sql.parquet.row.metadata``; that schema is
+      used, as Spark's own ``readSchemaFromFooter`` does;
+    - any other file maps through ``from_arrow_schema``, with naive
+      timestamps as TIMESTAMP_NTZ when the session's
+      ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on; INT96
+      columns are TIMESTAMP and TIMESTAMP(NANOS) columns LongType.
+
+    Spark's inference still runs where the footer cannot prove the
+    type: no data file (so an empty directory raises Spark's error),
+    a path pyarrow cannot read, an unsigned or otherwise unmapped
+    type, nanos or INT96 inside a nested column, or a non-default
+    ``binaryAsString``, ``int96AsTimestamp`` or ``mergeSchema``. A path
+    on a remote store (a URI scheme other than ``file:``) is not read
+    on the driver at all, so Spark infers its schema and its
+    TIMESTAMP(NANOS) columns are not converted. Files
+    under one path are expected to share a schema, as Spark's
+    inference without ``mergeSchema`` also assumes. Partition columns
+    of a ``k=v/`` directory are discovered by Spark either way.
+
+    With a TIMESTAMP(NANOS) column the session-wide conf
+    ``spark.sql.legacy.parquet.nanosAsLong`` is set to true: Spark
+    reads it when it plans the scan, not when the DataFrame is built,
+    so it cannot be scoped to this call.
+    """
+    schema, nano_cols = _footer_schema(spark, path)
+    return _read(spark, schema, nano_cols, path)
 
 
 def read_jsonl(

@@ -91,28 +91,3 @@ class TableSpec:
         out.createOrReplaceTempView(self.name)
         return out
 
-
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores ``ts`` as TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects. Read nanos as long and floor-divide to
-    micros — identical to DuckDB's nanos->micros truncation, so oracle
-    value-hashes agree."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
-
-
-def load_sf_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> dict[str, DataFrame]:
-    """Load the driver's TPC-H-ish parquet tables and register temp views."""
-    names = names or (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    out: dict[str, DataFrame] = {}
-    for n in names:
-        df = load_events(spark, sf_dir) if n == "events" else spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -184,9 +184,9 @@ def main() -> int:
     spark = eng.get_spark("check-oracle", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
     # --parallel shares ONE SparkSession across worker threads, so query
     # builders must not toggle session-global conf per-query.  The single
-    # session conf any builder sets today is nanosAsLong (tables.py /
-    # sources/batch.py / operators/layout.py — always to "true", for the
-    # driver's TIMESTAMP(NANOS) events files); pre-set it here so those
+    # session conf any builder sets today is nanosAsLong (read_parquet in
+    # sources/batch.py, also behind operators/layout.py — always to "true",
+    # for TIMESTAMP(NANOS) columns); pre-set it here so those
     # writes are idempotent no-ops under the pool, and assert after the
     # run that nothing mutated the confs correctness depends on behind
     # the other threads' backs (the no-session-conf-mutation invariant
