@@ -27,6 +27,7 @@ from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.util i
     fan_out,
     unpersist_local_checkpoint,
 )
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.sources.batch import read_parquet
 
 MINHASH_PRIME = 2147483647  # 2^31-1, Mersenne: (a*h + b) stays < 2^62
 
@@ -1471,7 +1472,7 @@ def lsh_probe_pairs(
             "rebuild with lsh_write_index"
         )
         try:
-            meta = spark.read.parquet(path + "/meta").head()
+            meta = read_parquet(spark, path + "/meta").head()
         except AnalysisException as exc:
             cond = getattr(exc, "getCondition", getattr(exc, "getErrorClass", lambda: None))()
             if meta_exists is None and cond == "PATH_NOT_FOUND":
@@ -1505,7 +1506,7 @@ def lsh_probe_pairs(
         for r in q.select("band", "__bp").distinct().collect()
     )
     keys = [b * band_parts + p for b, p in probed]
-    index = spark.read.parquet(path + "/buckets").filter(
+    index = read_parquet(spark, path + "/buckets").filter(
         (F.col("band") * band_parts + F.col("__bp")).isin(keys)
     )
     cand = (
@@ -1527,7 +1528,7 @@ def lsh_probe_pairs(
         ),
         id_col, text_col, n,
     ).select(F.col("__id").alias("query_id"), F.col("__sh").alias("__sha"))
-    corpus_docs = spark.read.parquet(path + "/docs").join(
+    corpus_docs = read_parquet(spark, path + "/docs").join(
         cand.select(F.col("corpus_id").alias("__cid")).distinct(),
         F.col("__id") == F.col("__cid"),
         "left_semi",

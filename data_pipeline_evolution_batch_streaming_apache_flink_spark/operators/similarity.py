@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.functions.vectors import cosine, norm
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.util import cap_buckets, fan_out
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.sources.batch import read_parquet
 
 
 def _check_query_cap(queries: DataFrame, query_id: str, max_query_rows: int | None) -> None:
@@ -497,11 +498,11 @@ def ivf_probe_topk(
     scan flows into the join with NO exchange. Returns
     (query_id, corpus_id, cos, rank)."""
     spark = queries.sparkSession
-    cent_df = spark.read.parquet(path + "/centroids")
+    cent_df = read_parquet(spark, path + "/centroids")
     qcells = _probe_cells(queries, query_id, vec_col, cent_df, n_probe)
     # Bounded driver round-trip: distinct probed cell ids, <= n_cells ints.
     probed = sorted(r["__cell"] for r in qcells.select("__cell").distinct().collect())
-    index = spark.read.parquet(path + "/index").filter(F.col("__cell").isin(probed))
+    index = read_parquet(spark, path + "/index").filter(F.col("__cell").isin(probed))
     scored = (
         index.join(F.broadcast(qcells), "__cell")
         .filter(F.col("qid") != F.col("cid"))
@@ -948,8 +949,8 @@ def ivfpq_probe_topk(
     import numpy as np
 
     spark = queries.sparkSession
-    cent_df = spark.read.parquet(path + "/centroids")
-    bpdf = spark.read.parquet(path + "/codebooks").toPandas().sort_values(["s", "c"])
+    cent_df = read_parquet(spark, path + "/centroids")
+    bpdf = read_parquet(spark, path + "/codebooks").toPandas().sort_values(["s", "c"])
     m = int(bpdf["s"].max()) + 1
     n_centroids = int(bpdf["c"].max()) + 1
     books = np.stack(bpdf["v"].to_numpy()).reshape(m, n_centroids, -1)
@@ -958,7 +959,7 @@ def ivfpq_probe_topk(
         queries, query_id, vec_col, cent_df, books, n_probe, max_query_rows
     )
     probed = sorted(probes_by_cell)
-    encoded = spark.read.parquet(path + "/codes").filter(F.col("__cell").isin(probed))
+    encoded = read_parquet(spark, path + "/codes").filter(F.col("__cell").isin(probed))
     return _ivfpq_query(
         encoded, cent_df, books, queries, corpus, query_id, corpus_id,
         vec_col, k, n_probe, refine, max_query_rows,

@@ -676,7 +676,7 @@ def q_similarity_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
     return bucketed_cosine_pairs(
         t["embeddings"], "vec_id", "embedding", threshold=0.45, n_planes=3, n_tables=16,
-        hashed=spark.read.parquet(path + "/buckets"), verify="bucket",
+        hashed=read_parquet(spark, path + "/buckets"), verify="bucket",
     )
 
 

@@ -3,9 +3,11 @@
 tombstones, written from ``foreachBatch``.
 
 - :class:`ParquetUpsertSink` — files-as-state upsert for tests/local runs:
-  every micro-batch appends with its epoch id; the *current state* is a
-  distributed compaction (latest_per_key over key + (epoch, order)). No
-  driver-side state, so it scales like any parquet table.
+  every micro-batch writes its rows, tagged with its epoch id, into its
+  own epoch directory (replay contract: ``streaming/epochlog.py``); the
+  *current state* is a distributed compaction (latest_per_key over key +
+  (epoch, order)). No driver-side state, so it scales like any parquet
+  table.
 - :func:`write_upsert_kafka` — the production path: per-batch compaction,
   JSON key/value, tombstones as null values. Requires the Kafka connector
   jars; import/config is validated lazily so environments without Kafka
@@ -14,17 +16,20 @@ tombstones, written from ``foreachBatch``.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.changelog import latest_per_key
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import epochlog
 
 
 class ParquetUpsertSink:
-    """Keyed upsert sink backed by an append-only parquet log.
+    """Keyed upsert sink backed by a parquet log of per-epoch directories
+    (``streaming/epochlog.py``): a replayed micro-batch replaces its own
+    files instead of adding a second copy. Epoch ids number the
+    micro-batches of one query, so a sink path belongs to one checkpoint.
 
     Use ``foreach_batch`` as the ``writeStream.foreachBatch`` callback;
     ``current_state`` returns the compacted table (latest row per key,
@@ -45,23 +50,12 @@ class ParquetUpsertSink:
         self.op_col = op_col
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(self.path)
-        )
+        epochlog.write(batch_df.withColumn("__epoch", F.lit(epoch_id)), self.path, epoch_id)
 
     def current_state(self, spark: SparkSession) -> DataFrame:
-        if not os.path.isdir(self.path):
-            # zero micro-batches ran (empty bounded source): the state is
-            # empty, but with no written schema there is nothing to infer —
-            # raise actionably instead of an opaque PATH_NOT_FOUND
-            raise FileNotFoundError(
-                f"upsert sink at {self.path} holds no data: the stream wrote "
-                "no micro-batches (empty source?); there is no schema to "
-                "return an empty state with"
-            )
-        log = spark.read.parquet(self.path)
+        # zero micro-batches (an empty bounded source) leave no written
+        # schema to return an empty state with: output() raises
+        log = epochlog.output(spark, self.path)
         ordering = ["__epoch", *self.order_by]
         return latest_per_key(log, self.keys, ordering, op_col=self.op_col).drop("__epoch")
 
@@ -431,23 +425,3 @@ def write_upsert_jdbc(
     finally:
         conn.close()
 
-
-def run_stream_to_upsert_parquet(
-    stream_df: DataFrame,
-    keys: str | list[str],
-    order_by: str | list[str],
-    op_col: str | None = None,
-    base_dir: str | None = None,
-) -> tuple[ParquetUpsertSink, "object"]:
-    """Start an availableNow streaming query into a fresh ParquetUpsertSink.
-    Returns (sink, query); caller awaits termination then reads
-    ``sink.current_state``. Test/batch-replay helper."""
-    base = base_dir or os.path.join("/tmp", f"dpe_upsert_{uuid.uuid4().hex}")
-    sink = ParquetUpsertSink(os.path.join(base, "data"), keys, order_by, op_col)
-    query = (
-        stream_df.writeStream.foreachBatch(sink.foreach_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return sink, query

@@ -17,6 +17,7 @@ columns.
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +56,25 @@ def _provable(t) -> bool:
     ))
 
 
+def _listed(name: str) -> bool:
+    """Spark's file index skips names starting with ``.``, and those
+    starting with ``_`` unless they hold ``=`` (a partition directory
+    such as ``__cell=3``, which pyarrow's own discovery would skip)."""
+    return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+
+def _first_data_file(path: str) -> str | None:
+    """The first data file Spark lists under a local ``path``."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(filter(_listed, dirs))
+        data = sorted(filter(_listed, files))
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
 def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType | None, list[str]]:
     """(schema, nano columns) from the footer of the first data file
     under ``path``. ``schema`` is the one Spark's inference gives, or
@@ -67,17 +87,19 @@ def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType | None, l
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    if urlparse(path).scheme not in ("", "file"):
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
         # a remote store: Spark reaches it through its own filesystem
         # config; pyarrow would try its own client and credentials
         return None, []
+    first = _first_data_file(url.path if url.scheme else path)
+    if first is None:  # no data file: Spark's inference raises its error
+        return None, []
     try:
-        frag = next(ds.dataset(path, format="parquet").get_fragments(), None)
-        if frag is None:  # no data file: Spark's inference raises its error
-            return None, []
+        frag = next(ds.dataset(first, format="parquet").get_fragments())
         meta = frag.metadata
         arrow = frag.physical_schema
-    except (OSError, pa.ArrowException):  # missing path, glob, not parquet
+    except (OSError, pa.ArrowException):  # not a parquet file
         return None, []
     inferred_as_mapped = all(
         spark.conf.get(k, v).lower() == v for k, v in _INFERENCE_CONFS.items()

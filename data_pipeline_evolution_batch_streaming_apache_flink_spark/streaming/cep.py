@@ -39,10 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.cep import Step, _as_col, _check_steps, _match_events
-
-
-def _ms(v) -> int:
-    return pd.Timestamp(v).value // 1_000_000
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import _ms
 
 
 def streaming_match_pattern(

@@ -26,6 +26,9 @@ foreachBatch** — the same pattern Delta/Iceberg pipelines use:
   necessarily arrived once the frontier passed) and appended to the output
   upsert log.
 
+Logs, output and ``frontier.json`` follow the exactly-once replay
+contract of ``streaming/epochlog.py``.
+
 Per-batch cost: the fact read is O(pending epochs). ``frontier.json``
 records the max event time of every fact-log epoch directory that still
 holds a row above the emitted frontier, and an emission reads only those
@@ -33,12 +36,12 @@ directories; a directory leaves the record once the frontier passes its
 max. The dim logs are still read (and sorted by each as-of join) in
 full, so dim work stays O(log). Compacting each dim log to the latest
 version at-or-below the frontier — the pruning rule of the in-state
-streaming operator in ``streaming/__init__.py`` — would bound it.
+streaming operator in ``streaming/__init__.py``, kept replay-safe by the
+compaction rule of ``streaming/epochlog.py`` — would bound it.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -47,6 +50,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
+
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import epochlog
 
 
 @dataclass(frozen=True)
@@ -87,71 +92,22 @@ class IncrementalTemporalJoin:
         self.enrich = enrich
         self.route = route
         self.delay = delay
+        self.meta_path = os.path.join(base_dir, "frontier.json")
         os.makedirs(base_dir, exist_ok=True)
 
-    # -- log plumbing -------------------------------------------------------
-    # Every write lands in a per-epoch subdirectory with overwrite mode, so
-    # a replayed micro-batch (Structured Streaming's at-least-once
-    # foreachBatch contract) overwrites its own previous attempt instead of
-    # appending duplicates — the logs and the output are exactly-once after
-    # any number of retries (ADVICE r1).
     def _log_path(self, name: str) -> str:
         return os.path.join(self.base, "logs", name)
-
-    @staticmethod
-    def _epoch_dir(epoch_id: int) -> str:
-        return f"e{int(epoch_id):010d}"
-
-    def _write_epoch(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        """Overwrite into an epoch-named subdir (idempotent replay)."""
-        df.write.mode("overwrite").parquet(os.path.join(path, self._epoch_dir(epoch_id)))
-
-    def _read_log(self, spec: SourceSpec) -> DataFrame:
-        path = self._log_path(spec.name)
-        if not os.path.isdir(path):
-            return self.spark.createDataFrame([], spec.schema)
-        return (
-            self.spark.read.schema(spec.schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
-        )
-
-    def _read_epochs(self, spec: SourceSpec, epoch_dirs: list[str]) -> DataFrame:
-        """The named epoch directories of a log, by explicit paths."""
-        if not epoch_dirs:
-            return self.spark.createDataFrame([], spec.schema)
-        path = self._log_path(spec.name)
-        return self.spark.read.schema(spec.schema).parquet(
-            *(os.path.join(path, d) for d in epoch_dirs)
-        )
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.base, "frontier.json")
-
-    def _load_meta(self) -> dict:
-        try:
-            with open(self._meta_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {"max_ts": {}, "emitted_frontier": None, "last_epoch": None, "pending_facts": {}}
-
-    def _save_meta(self, meta: dict) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path())
 
     # -- the micro-batch body ----------------------------------------------
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         specs = {self.fact.name: self.fact, **self.dims}
-        meta = self._load_meta()
-        # Fully-applied epochs (meta saved) are skipped outright on replay;
-        # a partially-applied epoch (crash before _save_meta) re-runs and
-        # its per-epoch overwrites land on the same paths — idempotent
-        # either way. Epoch ids are monotonic per checkpoint (Structured
-        # Streaming continues numbering across restarts).
-        last = meta["last_epoch"]
-        if last is not None and int(epoch_id) <= int(last):
+        meta = epochlog.load_meta(
+            self.meta_path,
+            {"max_ts": {}, "emitted_frontier": None, "last_epoch": None, "pending_facts": {}},
+        )
+        # replay rules: streaming/epochlog.py. A partly applied epoch
+        # rewrites its own log directories before reading them back.
+        if epochlog.applied(meta, epoch_id):
             return
         routed = self.route(batch_df)
 
@@ -161,7 +117,7 @@ class IncrementalTemporalJoin:
         def write(name: str, rows: DataFrame):
             seen = Observation()
             ts = specs[name].ts
-            self._write_epoch(
+            epochlog.write(
                 rows.observe(seen, F.expr(f"max(CAST(`{ts}` AS TIMESTAMP)) AS m")),
                 self._log_path(name),
                 epoch_id,
@@ -193,14 +149,13 @@ class IncrementalTemporalJoin:
             # a fact epoch whose rows are all at or below the emitted
             # frontier can never emit, so it is not recorded
             if name == self.fact.name and (prev_frontier is None or cur > prev_frontier):
-                meta["pending_facts"][self._epoch_dir(epoch_id)] = cur
-        meta["last_epoch"] = int(epoch_id)
+                meta["pending_facts"][epochlog.epoch_dir(epoch_id)] = cur
 
         # multi-input watermark: min over every input's cumulative max −
         # delay. Inputs that never produced a row hold the frontier at -inf
         # (reference idle-source stall).
         if len(meta["max_ts"]) < len(specs):
-            self._save_meta(meta)
+            epochlog.commit(self.meta_path, meta, epoch_id)
             return
         # driver-local arithmetic on a handful of locally-held isoformat
         # strings — the createDataFrame+collect Spark job this replaces
@@ -216,50 +171,40 @@ class IncrementalTemporalJoin:
         )
         frontier_s = frontier_dt.isoformat(sep=" ")
         if prev_frontier is not None and frontier_s <= prev_frontier:
-            self._save_meta(meta)
+            epochlog.commit(self.meta_path, meta, epoch_id)
             return
 
         # every recorded epoch holds a row above prev_frontier; the filter
         # below still drops its rows at or below it (late arrivals)
-        facts = self._read_epochs(self.fact, sorted(meta["pending_facts"]))
+        facts = epochlog.read(
+            self.spark, self._log_path(self.fact.name), self.fact.schema, sorted(meta["pending_facts"])
+        )
         ts = F.col(self.fact.ts).cast("timestamp")
         emittable = facts.filter(ts <= F.lit(frontier_s).cast("timestamp"))
         if prev_frontier is not None:
             emittable = emittable.filter(ts > F.lit(prev_frontier).cast("timestamp"))
 
-        dim_logs = {name: self._read_log(spec) for name, spec in self.dims.items()}
+        dim_logs = {
+            name: epochlog.read(self.spark, self._log_path(name), spec.schema)
+            for name, spec in self.dims.items()
+        }
         out = self.enrich(emittable, dim_logs)
-        self._write_epoch(out, os.path.join(self.base, "out"), epoch_id)
+        epochlog.write(out, os.path.join(self.base, "out"), epoch_id)
 
         meta["emitted_frontier"] = frontier_s
         meta["pending_facts"] = {
             d: m for d, m in meta["pending_facts"].items() if m > frontier_s
         }
-        self._save_meta(meta)
+        epochlog.commit(self.meta_path, meta, epoch_id)
 
     # -- results ------------------------------------------------------------
     def output(self) -> DataFrame:
         """All emitted rows (append log of per-epoch directories). Compact
         downstream with ``operators.changelog.latest_per_key`` for upsert
         semantics."""
-        path = os.path.join(self.base, "out")
-        if not os.path.isdir(path):
-            raise FileNotFoundError("no output emitted yet")
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(path)
+        return epochlog.output(self.spark, os.path.join(self.base, "out"))
 
     def run_available_now(self, stream_df: DataFrame, timeout_s: int = 600) -> None:
-        """Drain a bounded stream through the engine (tests/backfills).
-        Raises on timeout instead of returning with the query still
-        running against a half-written output (review r7)."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.foreach_batch)
-            .option("checkpointLocation", os.path.join(self.base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"incremental engine drain exceeded {timeout_s}s; query "
-                "stopped — output is partial, rerun with a larger timeout"
-            )
+        """Drain a bounded stream through the engine (tests/backfills);
+        raises on timeout."""
+        epochlog.drain(stream_df, self.foreach_batch, os.path.join(self.base, "ckpt"), timeout_s)

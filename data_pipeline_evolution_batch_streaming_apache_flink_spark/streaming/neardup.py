@@ -23,8 +23,9 @@ foreachBatch incremental maintenance (the same engine shape as
   (4) novel docs append to both logs, duplicates emit
   (doc_id, dup_of, jaccard) decisions.
 
-Same exactly-once contract as the other foreachBatch engines: per-epoch
-overwrite directories + applied-epoch skip. At scale, bucket/partition
+Logs, decisions and ``meta.json`` follow the exactly-once replay
+contract of ``streaming/epochlog.py``: a micro-batch matches against the
+documents accepted by the epochs below it. At scale, bucket/partition
 the band index by ``band_hash`` so the per-batch join prunes to
 colliding partitions, and compact it periodically (`compact_files`).
 
@@ -41,7 +42,6 @@ with ``operators/dedup.py near-dup clustering`` when needed.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +52,7 @@ from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.dedup 
     minhash_lsh_pairs,
     minhash_signature,
 )
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import epochlog
 
 
 class StreamingNearDup:
@@ -82,36 +83,8 @@ class StreamingNearDup:
         self.seed = seed
         os.makedirs(base_dir, exist_ok=True)
 
-    # -- plumbing (epoch-overwrite exactly-once) ---------------------------
     def _path(self, name: str) -> str:
         return os.path.join(self.base, name)
-
-    def _write_epoch(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        """Overwrite into an epoch-named subdir (idempotent replay)."""
-        df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
-
-    def _read(self, name: str, schema: str) -> DataFrame:
-        path = self._path(name)
-        if not os.path.isdir(path):
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
-        )
-
-    def _meta(self) -> dict:
-        try:
-            with open(self._path("meta.json")) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {"last_epoch": None}
-
-    def _save_meta(self, meta: dict) -> None:
-        tmp = self._path("meta.json") + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._path("meta.json"))
 
     # -- band hashing -------------------------------------------------------
     def _band_rows(self, docs: DataFrame) -> DataFrame:
@@ -141,9 +114,9 @@ class StreamingNearDup:
 
     # -- the micro-batch body ------------------------------------------------
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        meta = self._meta()
-        last = meta.get("last_epoch")
-        if last is not None and int(epoch_id) <= int(last):
+        meta_path = self._path("meta.json")
+        meta = epochlog.load_meta(meta_path, {"last_epoch": None})
+        if epochlog.applied(meta, epoch_id):
             return
 
         batch = batch_df.select(
@@ -161,8 +134,9 @@ class StreamingNearDup:
         )
         survivors = batch.join(intra_dups.select("id"), "id", "left_anti")
 
-        # 2. candidates vs the accepted index: band equi-join
-        index = self._read("bands", "band int, band_hash long, id long")
+        # 2. candidates vs the index of the documents accepted before this
+        # epoch: band equi-join (a replay must not match its own writes)
+        index = self._accepted("bands", "band int, band_hash long, id long", epoch_id)
         cand = (
             self._band_rows(survivors)
             .withColumnRenamed("id", "new_id")
@@ -172,7 +146,7 @@ class StreamingNearDup:
         )
 
         # 3. exact verification against accepted text
-        accepted = self._read("docs", "id long, text string")
+        accepted = self._accepted("docs", "id long, text string", epoch_id)
         sh_new = survivors.select(
             F.col("id").alias("new_id"), word_shingles("text", self.n).alias("__sha")
         )
@@ -208,33 +182,29 @@ class StreamingNearDup:
             .unionByName(cross_dups.select("id", "dup_of", "jaccard"))
             .withColumn("__epoch", F.lit(int(epoch_id)).cast("long"))
         )
-        self._write_epoch(decisions, self._path("out"), epoch_id)
-        self._write_epoch(novel.select(F.col("id").cast("long"), "text"), self._path("docs"), epoch_id)
-        self._write_epoch(
+        epochlog.write(decisions, self._path("out"), epoch_id)
+        epochlog.write(novel.select(F.col("id").cast("long"), "text"), self._path("docs"), epoch_id)
+        epochlog.write(
             self._band_rows(novel).select(
                 F.col("band").cast("int"), F.col("band_hash").cast("long"), F.col("id").cast("long")
             ),
             self._path("bands"),
             epoch_id,
         )
-        meta["last_epoch"] = int(epoch_id)
-        self._save_meta(meta)
+        epochlog.commit(meta_path, meta, epoch_id)
+
+    def _accepted(self, log: str, schema: str, epoch_id: int) -> DataFrame:
+        path = self._path(log)
+        return epochlog.read(self.spark, path, schema, epochlog.below(path, epoch_id))
 
     # -- results --------------------------------------------------------------
     def decisions(self) -> DataFrame:
-        path = self._path("out")
-        if not os.path.isdir(path):
-            raise FileNotFoundError("no decisions emitted yet")
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(path)
+        return epochlog.output(self.spark, self._path("out"))
 
     def accepted(self) -> DataFrame:
-        return self._read("docs", "id long, text string")
+        return epochlog.read(self.spark, self._path("docs"), "id long, text string")
 
     def run_available_now(self, stream_df: DataFrame) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.foreach_batch)
-            .option("checkpointLocation", self._path("ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        """Drain a bounded stream through the engine (tests/backfills);
+        raises on timeout."""
+        epochlog.drain(stream_df, self.foreach_batch, self._path("ckpt"))

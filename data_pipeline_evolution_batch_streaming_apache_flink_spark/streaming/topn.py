@@ -24,11 +24,11 @@ maintenance in foreachBatch**:
   shrank — exactly the wire shape Flink's Top-N emits to an upsert sink
   ("output with rank number" mode).
 
-Exactly-once: every write lands in a per-epoch overwrite directory and
-fully-applied epochs are skipped on replay (same contract as
-``IncrementalTemporalJoin``). State stays bounded via periodic
-compaction (every ``compact_every`` epochs the log is rewritten to one
-row per live key).
+State, output and ``meta.json`` follow the exactly-once replay contract
+of ``streaming/epochlog.py``: prior state comes from the epochs below
+the running one. Every ``compact_every`` epochs the epoch's state
+directory holds the compacted image (one row per live key) in place of
+the batch, and replaces the directories below it, which bounds the log.
 
 Reference behavior: Flink Top-N docs (public); the reference tutorial's
 "most recent orders per table" pattern (scenario 2's view projection +
@@ -37,14 +37,13 @@ rank) is the batch twin — suite query ``window_rank``.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.operators.changelog import latest_per_key
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import epochlog
 
 
 class StreamingTopN:
@@ -89,28 +88,10 @@ class StreamingTopN:
         self.op_col = op_col
         self.delete_ops = delete_ops
         self.compact_every = compact_every
+        self.state_path = os.path.join(base_dir, "logs", "state")
+        self.out_path = os.path.join(base_dir, "out")
+        self.meta_path = os.path.join(base_dir, "meta.json")
         os.makedirs(base_dir, exist_ok=True)
-
-    # -- log plumbing (epoch-overwrite exactly-once, as incremental.py) ----
-    def _state_path(self) -> str:
-        return os.path.join(self.base, "logs", "state")
-
-    def _out_path(self) -> str:
-        return os.path.join(self.base, "out")
-
-    def _write_epoch(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        """Overwrite into an epoch-named subdir (idempotent replay)."""
-        df.write.mode("overwrite").parquet(os.path.join(path, f"e{int(epoch_id):010d}"))
-
-    def _read_state_raw(self) -> DataFrame:
-        path = self._state_path()
-        if not os.path.isdir(path):
-            return self.spark.createDataFrame([], self.schema + ", __epoch long")
-        return (
-            self.spark.read.schema(self.schema + ", __epoch long")
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
-        )
 
     def _compact(self, raw: DataFrame) -> DataFrame:
         """Latest live row per key (tombstones applied). EVENT order (the
@@ -125,22 +106,6 @@ class StreamingTopN:
             delete_ops=self.delete_ops,
         )
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.base, "meta.json")
-
-    def _load_meta(self) -> dict:
-        try:
-            with open(self._meta_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {"last_epoch": None}
-
-    def _save_meta(self, meta: dict) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta_path())
-
     # -- rank helpers -------------------------------------------------------
     def _order_cols(self) -> list[Column]:
         return [F.col(c) if isinstance(c, str) else c for c in self.order_by]
@@ -154,9 +119,8 @@ class StreamingTopN:
 
     # -- the micro-batch body ------------------------------------------------
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        meta = self._load_meta()
-        last = meta.get("last_epoch")
-        if last is not None and int(epoch_id) <= int(last):
+        meta = epochlog.load_meta(self.meta_path, {"last_epoch": None})
+        if epochlog.applied(meta, epoch_id):
             return
 
         batch = latest_per_key(
@@ -164,7 +128,14 @@ class StreamingTopN:
         ).withColumn("__epoch", F.lit(int(epoch_id)).cast("long"))
         batch = batch.localCheckpoint(eager=True)  # consumed 4× below
 
-        prior_raw = self._read_state_raw()
+        # the state before this epoch: from the last compacted image up to,
+        # not including, this epoch (a replay must not read its own writes)
+        prior_raw = epochlog.read(
+            self.spark,
+            self.state_path,
+            self.schema + ", __epoch long",
+            epochlog.below(self.state_path, epoch_id, meta.get("state_from")),
+        )
         prior = self._compact(prior_raw).localCheckpoint(eager=True)
 
         # touched groups: where batch rows land now + where their keys lived
@@ -197,27 +168,20 @@ class StreamingTopN:
         out = upserts.unionByName(deletes).withColumn(
             "__out_epoch", F.lit(int(epoch_id)).cast("long")
         )
-        self._write_epoch(out, self._out_path(), epoch_id)
+        epochlog.write(out, self.out_path, epoch_id)
 
-        # append the batch to the state log; periodically rewrite compacted
-        self._write_epoch(batch, self._state_path(), epoch_id)
-        if self.compact_every and int(epoch_id) % self.compact_every == self.compact_every - 1:
-            compacted = self._compact(self._read_state_raw()).localCheckpoint(eager=True)
-            tmp = self._state_path() + ".compact"
-            compacted.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(self._state_path())
-            os.replace(tmp, self._state_path())
-
-        meta["last_epoch"] = int(epoch_id)
-        self._save_meta(meta)
+        compacting = self.compact_every and int(epoch_id) % self.compact_every == self.compact_every - 1
+        epochlog.write(new_snapshot if compacting else batch, self.state_path, epoch_id)
+        if compacting:
+            meta["state_from"] = int(epoch_id)
+        epochlog.commit(self.meta_path, meta, epoch_id)
+        if compacting:  # only once meta.json reads from the new image
+            epochlog.drop_below(self.state_path, epoch_id)
 
     # -- results --------------------------------------------------------------
     def changelog(self) -> DataFrame:
         """Raw emitted changelog (every epoch's U/D rows)."""
-        path = self._out_path()
-        if not os.path.isdir(path):
-            raise FileNotFoundError("no output emitted yet")
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(path)
+        return epochlog.output(self.spark, self.out_path)
 
     def current_topn(self) -> DataFrame:
         """Compacted view: the live Top-N (latest record per (group, rank),
@@ -231,11 +195,6 @@ class StreamingTopN:
         ).drop("__out_epoch")
 
     def run_available_now(self, stream_df: DataFrame) -> None:
-        """Drain a bounded stream through the engine (tests/backfills)."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.foreach_batch)
-            .option("checkpointLocation", os.path.join(self.base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        """Drain a bounded stream through the engine (tests/backfills);
+        raises on timeout."""
+        epochlog.drain(stream_df, self.foreach_batch, os.path.join(self.base, "ckpt"))

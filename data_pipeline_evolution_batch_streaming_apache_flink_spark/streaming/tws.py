@@ -64,20 +64,9 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import _ms, _vkey
+
 EMIT_TS = "__emit_ts"
-
-
-def _ms(v) -> int:
-    return pd.Timestamp(v).value // 1_000_000
-
-
-def _vkey(entry: tuple) -> tuple:
-    """None-safe deterministic sort key for ``(ts_ms, live, payload)``:
-    ts, then live (tombstone < live), then payload with NULLs first per
-    field — never compares None against a value (ADVICE r1: a NULL payload
-    column in a same-ts duplicate crashed the raw tuple sort)."""
-    ts, live, payload = entry
-    return (ts, live, tuple((v is not None, v) for v in payload))
 
 
 class _AsOfProcessor(StatefulProcessor):

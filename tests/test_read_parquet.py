@@ -97,17 +97,24 @@ def test_read_pruned_on_spark_written_timestamps(spark, tmp_path):
 
 
 def test_directories_match_spark_inference(spark, tmp_path):
-    flat, hive = tmp_path / "flat", tmp_path / "hive"
+    flat, hive, under = tmp_path / "flat", tmp_path / "hive", tmp_path / "under"
     flat.mkdir()
     for i in range(3):
         pq.write_table(pa.table({"a": pa.array([i, i + 10], pa.int64()), "s": ["x", "y"]}), str(flat / f"part-{i}.parquet"))
     for k in (1, 2):
         (hive / f"k={k}").mkdir(parents=True)
         pq.write_table(pa.table({"a": pa.array([k], pa.int64())}), str(hive / f"k={k}" / "p.parquet"))
-    for p in (str(flat), str(hive)):
+    # an index layout: partition directories whose column name starts
+    # with "_", next to a Spark-style _SUCCESS marker
+    for k in (3, 4):
+        (under / f"__cell={k}").mkdir(parents=True)
+        pq.write_table(pa.table({"a": pa.array([k], pa.int64())}), str(under / f"__cell={k}" / "p.parquet"))
+    (under / "_SUCCESS").touch()
+    for p in (str(flat), str(hive), str(under)):
         assert _footer_schema(spark, p)[0] is not None
         _assert_same(spark, p)
     assert read_parquet(spark, str(hive)).columns == ["a", "k"]
+    assert read_parquet(spark, str(under)).columns == ["a", "__cell"]
 
 
 def test_unsigned_column_left_to_spark_inference(spark, tmp_path):

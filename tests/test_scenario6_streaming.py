@@ -21,6 +21,7 @@ from data_pipeline_evolution_batch_streaming_apache_flink_spark.plans.pizzeria_s
     scenario6_engine,
 )
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.sources.streaming import json_file_stream
+from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming import epochlog
 
 
 def env(table: str, op: str, **data) -> dict:
@@ -243,19 +244,19 @@ def test_scenario6_routing_runs_one_job_per_table(spark, tmp_path):
     # dims only: the orders input has no row yet, so the frontier cannot
     # advance and routing is all the micro-batch does
     assert _jobs_in_group(spark, "s6-route-e0", drive(dims, 0)) == 5
-    meta = engine._load_meta()
+    meta = epochlog.load_meta(engine.meta_path, {})
     assert sorted(meta["max_ts"]) == ["clients", "pizzas", "table_assignment", "tables"]
     assert meta["emitted_frontier"] is None
 
     # orders only: every dim table is empty in this batch, observes NULL
     # and keeps its max; the frontier (min over inputs) stays at the dims'
     _jobs_in_group(spark, "s6-route-e1", drive(orders_only, 1))
-    after = engine._load_meta()
+    after = epochlog.load_meta(engine.meta_path, {})
     assert after["max_ts"] == {**meta["max_ts"], "orders": "2024-03-01 10:01:00"}
     assert after["last_epoch"] == 1
 
     assert _jobs_in_group(spark, "s6-route-replay", drive(orders_only, 1)) == 0
-    assert engine._load_meta() == after
+    assert epochlog.load_meta(engine.meta_path, {}) == after
 
 
 def _df(spark, rows):
@@ -289,7 +290,7 @@ def test_scenario6_emission_reads_only_pending_order_epochs(spark, tmp_path):
         env(t, "c", id=999, event_time=hb2)
         for t in ("clients", "tables", "table_assignment", "pizzas", "orders")
     ]
-    pending = lambda: engine._load_meta()["pending_facts"]  # noqa: E731
+    pending = lambda: epochlog.load_meta(engine.meta_path, {})["pending_facts"]  # noqa: E731
 
     for epoch, rows in enumerate([dims, o1, upd]):
         engine.foreach_batch(_df(spark, rows), epoch)
@@ -338,7 +339,7 @@ def test_scenario6_failed_log_write_leaves_the_epoch_unapplied(spark, tmp_path):
     with pytest.raises(Exception, match="poisoned pizzas"):
         engine.foreach_batch(_df(spark, upd), 2)
     assert meta_path.read_text() == before
-    assert engine._load_meta()["last_epoch"] == 1
+    assert epochlog.load_meta(engine.meta_path, {})["last_epoch"] == 1
 
     engine.route = route_envelopes
     engine.foreach_batch(_df(spark, upd), 2)  # the replay of epoch 2

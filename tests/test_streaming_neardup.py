@@ -8,6 +8,7 @@ log, novel docs enter the index, and replayed epochs are no-ops.
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_evolution_batch_streaming_apache_flink_spark.streaming.neardup import StreamingNearDup
@@ -76,9 +77,20 @@ def test_streaming_neardup_decisions(spark, tmp_path):
 def test_streaming_neardup_replayed_epoch_is_skipped(spark, tmp_path):
     eng = _engine(spark, tmp_path)
     b0 = spark.createDataFrame(BATCHES[0], SCHEMA)
+    # a partly applied epoch: its logs land, then the meta save fails (a
+    # directory squats on the meta file's temporary name); the replay
+    # must not find its own documents as accepted twins
+    blocker = os.path.join(eng.base, "meta.json.tmp")
+    os.makedirs(blocker)
+    with pytest.raises(OSError):
+        eng.foreach_batch(b0, 0)
+    os.rmdir(blocker)
     eng.foreach_batch(b0, 0)
+    assert {r["id"]: r["dup_of"] for r in eng.decisions().collect()} == {1: None, 2: None, 3: 1}
+    assert {r["id"] for r in eng.accepted().collect()} == {1, 2}
+
     first = sorted(map(tuple, eng.decisions().collect()))
     n_docs = eng.accepted().count()
-    eng.foreach_batch(b0, 0)  # replay
+    eng.foreach_batch(b0, 0)  # replay of the applied epoch
     assert sorted(map(tuple, eng.decisions().collect())) == first
     assert eng.accepted().count() == n_docs

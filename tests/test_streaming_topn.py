@@ -9,6 +9,7 @@ promote rows, and a key that moves between groups.
 import json
 import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -53,10 +54,10 @@ def _write_batches(path, batches):
         os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
 
 
-def _engine(spark, tmp_path, n=2):
+def _engine(spark, tmp_path, n=2, compact_every=2, name="topn"):
     return StreamingTopN(
         spark,
-        str(tmp_path / "topn"),
+        str(tmp_path / name),
         SCHEMA,
         key_cols=["k"],
         group_col="grp",
@@ -64,7 +65,7 @@ def _engine(spark, tmp_path, n=2):
         version_col="ver",
         n=n,
         op_col="op",
-        compact_every=2,
+        compact_every=compact_every,
     )
 
 
@@ -120,14 +121,48 @@ def test_streaming_topn_changelog_discipline(spark, tmp_path):
     assert ("b", 2, "U") in e2  # k=1 lands at rank 2 of b
 
 
+def _stop_before_meta_save(eng, df, epoch_id):
+    """Run an epoch whose writes all land but whose meta save fails: a
+    directory squats on the meta file's temporary name, as if the
+    process stopped right before the atomic replace."""
+    blocker = os.path.join(eng.base, "meta.json.tmp")
+    os.makedirs(blocker)
+    with pytest.raises(OSError):
+        eng.foreach_batch(df, epoch_id)
+    os.rmdir(blocker)
+
+
+def _changes(eng, epoch_id):
+    log = eng.changelog().filter(f"__out_epoch = {epoch_id}")
+    return {(r["grp"], r["rnk"], r["__op"]) for r in log.collect()}
+
+
 def test_streaming_topn_replayed_epoch_is_skipped(spark, tmp_path):
-    """Re-running an applied epoch is a no-op (exactly-once contract)."""
+    """Re-running an applied epoch is a no-op, and re-running a partly
+    applied one (state written, meta not saved) reads only the state of
+    the epochs before it (exactly-once contract)."""
+    dfs = [spark.createDataFrame([tuple(r.values()) for r in b], SCHEMA) for b in BATCHES]
     eng = _engine(spark, tmp_path)
-    b0 = spark.createDataFrame([tuple(r.values()) for r in BATCHES[0]], SCHEMA)
-    eng.foreach_batch(b0, 0)
+    eng.foreach_batch(dfs[0], 0)
     first = sorted(map(tuple, eng.changelog().collect()))
-    eng.foreach_batch(b0, 0)  # replay
+    eng.foreach_batch(dfs[0], 0)  # replay
     assert sorted(map(tuple, eng.changelog().collect())) == first
+
+    # epoch 1 compacts the state log (compact_every=2)
+    _stop_before_meta_save(eng, dfs[1], 1)
+    eng.foreach_batch(dfs[1], 1)
+    assert _changes(eng, 1) == {("a", 1, "U"), ("a", 2, "U"), ("b", 2, "U")}
+    got = {(r["grp"], r["rnk"]): (r["k"], r["score"]) for r in eng.current_topn().collect()}
+    assert got == {("a", 1): (3, 99), ("a", 2): (1, 50), ("b", 1): (4, 90), ("b", 2): (6, 65)}
+
+    eng = _engine(spark, tmp_path, compact_every=0, name="topn_c0")
+    eng.foreach_batch(dfs[0], 0)
+    eng.foreach_batch(dfs[1], 1)
+    _stop_before_meta_save(eng, dfs[2], 2)
+    eng.foreach_batch(dfs[2], 2)
+    assert _changes(eng, 2) == {("a", 2, "U"), ("b", 2, "U")}
+    got = {(r["grp"], r["rnk"]): (r["k"], r["score"]) for r in eng.current_topn().collect()}
+    assert got == _batch_reference(spark)
 
 
 def test_streaming_topn_out_of_order_delivery(spark, tmp_path):
